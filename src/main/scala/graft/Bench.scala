@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -373,7 +372,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.cpus
     // Shuffle parallelism decoupled from thread count for scale-stress runs:
     // a cluster sizes partitions to the DATA (so per-partition agg/join state
     // stays roughly constant as data grows), while the pinned-32 default
@@ -381,32 +380,7 @@ object Bench {
     // 32 × factor to measure the cluster-realistic configuration
     // (BASELINE.md round 9) — same JVM, same 32 threads, more waves.
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // static conf, must be set before the session exists: the default
-      // 100-entry whole-stage-codegen cache thrashes across this suite's
-      // distinct plans, forcing janino recompiles in the WARM pass.
-      // Round 12 found the 2000-entry setting had silently broken the
-      // same way: the 158-query suite generates ~2400 distinct codegen
-      // sources per pass (metrics_last cold janino = 2417), and because
-      // passes replay in suite order, LRU eviction re-misses nearly every
-      // entry (warm pass: 1466 recompiles, 9–35 on the late composites —
-      // the round's four false `jvm>plan` stamps). Sized to the measured
-      // source count with ~3× headroom; a long-running cluster serving
-      // this workload would size the cache to the workload the same way.
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-medium open-cost model — see GraftSession (round 16):
-      // without it the 4 MB default bin-packs multi-file artifact tables
-      // back into 1-2 scan splits on this host's tmpfs scratch
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(shufflePartitions = shufflePartitions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The measured action is a noop-sink write, NOT count(): count() lets
     // Catalyst's ColumnPruning delete every projection the count doesn't
@@ -517,7 +491,7 @@ object Bench {
       }
       System.err.println(s"[bench] JIT drain: total ${prev} ms, settled=$settled")
     }
-    // Layout pre-warm (VERDICT r10 #6): the one-time Bucketed table builds
+    // Layout pre-warm (VERDICT r10 #6): the one-time bucketed table builds
     // (q32d/q33d) are session-scoped layout jobs — the 100 TB analogue is a
     // nightly ETL writer, not part of any query's serving cost — yet on
     // suite runs their build + the bucketed-write codegen landed inside the

@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine.
+/** Session factory for the engine: the one session profile. `graft.Bench`,
+  * `graft.Verify`, the CLIs and the test session all build from
+  * [[builder]], overriding only master, shuffle partitions and the
+  * warehouse dir, so a result cannot depend on which entry point ran it.
   *
   * Scale stance (designed for a multi-executor cluster, tested on local[N]):
   *   - AQE on: runtime join-strategy switching, skew-join splitting,
@@ -16,21 +19,26 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
 
-  def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
-    SparkSession
-      .builder()
+  def builder(master: String = s"local[$cpus]", shufflePartitions: String = cpus,
+              warehouseDir: Option[String] = None): SparkSession.Builder = {
+    val b = SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // static conf: the default 100-entry whole-stage-codegen cache
-      // thrashes under this engine's 110-query workload (several hundred
-      // distinct codegen stages), forcing repeated janino recompiles —
-      // measured 104→78 s on the warm bench suite. Sized to the workload,
-      // as a long-running cluster would.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // thrashes across the suite's distinct plans, forcing janino
+      // recompiles in the WARM pass. Round 12 found a 2000-entry setting
+      // had silently broken the same way: the suite generates ~2400
+      // distinct codegen sources per pass, and because bench passes
+      // replay in suite order, LRU eviction re-misses nearly every entry.
+      // Sized to the measured source count with ~3× headroom, as a
+      // long-running cluster serving this workload would be.
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.sql.session.timeZone", "UTC")
+      // pre-merge session windows map-side before the state-store shuffle
+      // (measured 4× on session-window aggregation; correctness unchanged)
       .config("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
       // events.parquet stores ts as TIMESTAMP(NANOS); Spark has no nanos
       // type, so read as long and convert in the loader (Tables.events).
@@ -44,6 +52,8 @@ object GraftSession {
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
       .config("spark.ui.enabled", "false")
+    warehouseDir.fold(b)(b.config("spark.sql.warehouse.dir", _))
+  }
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

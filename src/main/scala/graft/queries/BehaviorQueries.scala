@@ -232,7 +232,7 @@ object BehaviorQueries {
     * exchanges — only the in-partition (ts, event_id) sort remains.
     * Exposed for PlanSpec's pin. */
   private[graft] def bucketedSessionized(s: SparkSession, dir: String): DataFrame =
-    sessionizedFrame(Bucketed(s, dir, "q33d_events", 32, "user_id")(
+    sessionizedFrame(Materialize.bucketed(s, dir, "q33d_events", 32, "user_id")(
       Tables.events(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
           col("value"))))
@@ -243,7 +243,7 @@ object BehaviorQueries {
     * with NO exchange — the family's corpus-sized keying shuffle lives in
     * the one-time layout job instead. Exposed for PlanSpec's pin. */
   private[graft] def bucketedBaskets(s: SparkSession, dir: String): DataFrame =
-    Bucketed(s, dir, "q32d_op", 32, "l_orderkey")(
+    Materialize.bucketed(s, dir, "q32d_op", 32, "l_orderkey")(
       Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey")).distinct())
       .groupBy(col("l_orderkey"))
       .agg(collect_set(col("l_partkey")).as("parts"))
@@ -307,15 +307,12 @@ object BehaviorQueries {
         .repartition(col("ub")))
 
   /** Affected-bucket set: distinct user buckets of the delta batch —
-    * bounded by ScdBuckets (≤64 values), collected once per (session, dir)
-    * exactly like q24m's probed-cell list: MERGE router metadata, never
-    * corpus-sized. */
-  private val scdAffected =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]()
+    * bounded by ScdBuckets (≤64 values), collected once per (session,
+    * source state) exactly like q24m's probed-cell list: MERGE router
+    * metadata, never corpus-sized. */
   private[graft] def affectedBuckets(s: SparkSession, dir: String): Seq[Int] =
-    scdAffected.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$dir",
-      _ => fourColEvents(s, dir).filter(scdDeltaPred(s, dir))
+    Materialize.memo(s, "q36e_affected", Seq(dir))(
+      fourColEvents(s, dir).filter(scdDeltaPred(s, dir))
         .select(userBucket.as("ub")).distinct()
         .collect().map(_.getInt(0)).sorted.toSeq)
 
@@ -442,7 +439,7 @@ object BehaviorQueries {
     // q32 family's one corpus-sized shuffle is the order-key exchange
     // feeding the basket collect_set; this variant reads the distinct
     // (order, part) projection from a table CLUSTERED BY l_orderkey
-    // (q28b-adjacent machinery, `Bucketed`), so the scan itself carries
+    // (q28b-adjacent machinery, `Materialize.bucketed`), so the scan itself carries
     // HashPartitioning(l_orderkey) and the basket aggregation starts
     // MAP-SIDE — no exchange between scan and collect_set (PlanSpec pins
     // zero ShuffleExchange in the basket subplan). The keying shuffle moved

@@ -458,12 +458,11 @@ object CurationPipeline {
       outRoot: String, stateRoot: String, bp: DataFrame,
       baseNow: DataFrame): Unit = {
     val tDir = s"$stateRoot/t_v$id"
-    val pk = packable(tokenized(spanClean(segsOf(kept), bp)))
-    pk.write.mode("overwrite").parquet(tDir)
     // one-time POST-write inference (ADVICE r16): every slice of every
     // packSlice caller writes the same packable() shape, so the first
     // slice's footer job serves all later slices and runs
-    val t = Materialize.pinnedRead(ss, "packslice_t", tDir)
+    val t = Materialize.pinnedRead(ss, "packslice_t", tDir)(
+      packable(tokenized(spanClean(segsOf(kept), bp))))
     packFrom(t, baseNow).write.mode("overwrite").parquet(s"$outRoot/out_v$id")
     val nb = baseNow
       .unionByName(t.groupBy(col("lang")).agg(sum(col("n_tok")).as("base")))
@@ -1188,8 +1187,8 @@ object CurationPipeline {
     * plans with zero exchanges — only in-partition sorts remain. */
   private[graft] def bucketedSnapshotDiff(s: SparkSession, dir: String): DataFrame =
     snapshotDiffCore(
-      Bucketed(s, dir, "q51b_vold", 32, "o_id")(snapshotVold(s, dir)),
-      Bucketed(s, dir, "q51b_vnew", 32, "n_id")(snapshotVnew(s, dir)))
+      Materialize.bucketed(s, dir, "q51b_vold", 32, "o_id")(snapshotVold(s, dir)),
+      Materialize.bucketed(s, dir, "q51b_vnew", 32, "n_id")(snapshotVnew(s, dir)))
 
   /** Shared quality + train-split CTE block (q25h's aggregation + q25j's
     * hash rule over a tokenized frame `src`), ending in `<p>tr(doc_id)`.

@@ -314,9 +314,8 @@ object DedupQueries {
       .withColumn("_pid", spark_partition_id())
       .withColumn("_lr",
         dense_rank().over(Window.partitionBy(col("_pid")).orderBy(kc: _*)).cast("long"))
-    pinned.write.mode("overwrite").parquet(pinDir)
     // one-time POST-write inference per tag (ADVICE r16), zero jobs after
-    val local = Materialize.pinnedRead(s, s"ddr_$tag", pinDir)
+    val local = Materialize.pinnedRead(s, s"ddr_$tag", pinDir)(pinned)
     val offs = local.groupBy(col("_pid")).agg(max(col("_lr")).as("_cnt"))
       .withColumn("_off",
         coalesce(sum(col("_cnt")).over(
@@ -373,11 +372,10 @@ object DedupQueries {
       val scratch = scala.collection.mutable.Buffer[String]()
       def round(df: DataFrame, tag: String): (DataFrame, String) = {
         val d = graft.TempDirs.create(s"graft_${tag}_")
-        df.write.mode("overwrite").parquet(d)
         // one-time POST-write inference per builder (ADVICE r16): every
         // round writes the same (doc_id, pos, r) shape, so the first
         // round's footer job serves the rest
-        (Materialize.pinnedRead(s, s"${mTag}_round", d), d)
+        (Materialize.pinnedRead(s, s"${mTag}_round", d)(df), d)
       }
       // the superseded round + the pins feeding the round just written are
       // dead the moment the write commits — reclaim them eagerly so the
@@ -524,9 +522,8 @@ object DedupQueries {
         .withColumn("_rn", row_number().over(w).cast("long"))
         .withColumn("_cb", sum(col("isb")).over(
           w.rowsBetween(Window.unboundedPreceding, 0)))
-      pinned.write.mode("overwrite").parquet(pinDir)
       // one-time POST-write inference per merge tag (ADVICE r16)
-      val loc = Materialize.pinnedRead(s, s"${mTag}_pin", pinDir)
+      val loc = Materialize.pinnedRead(s, s"${mTag}_pin", pinDir)(pinned)
       val offs = loc.groupBy(col("_pid"))
         .agg(count(lit(1)).as("_n"), sum(col("isb")).as("_nb"))
         .select(col("_pid"),
@@ -935,8 +932,8 @@ object DedupQueries {
     * nothing — the conservative fallback, mirrored in the oracle's
     * COALESCE). A 1-row collect: the width parameterizes literal slice
     * bounds in the removal program, so it is a plan-construction scalar —
-    * the same class as BpeTrain's per-round argmax, not a data-path
-    * collect. */
+    * the same class as a BPE trainer's per-round argmax (BASELINE.md,
+    * BPE round-count scaling), not a data-path collect. */
   private[graft] def recommendedMinMatch(s: SparkSession, dir: String): Int = {
     val (_, _, rec) = lcpThresholdFrames(s, dir)
     val row = rec.collect()(0)

@@ -3,9 +3,12 @@ package graft.queries
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Cached parquet materialization for reused intermediates (signature
-  * tables, normed embedding frames, centroids).
+/** The engine's one session-scoped artifact store: cached parquet
+  * materialization for reused intermediates (signature tables, normed
+  * embedding frames, centroids), bucketed layout tables, replay dirs,
+  * pinned schemas and small driver-side scalars, all behind [[memo]].
   *
   * Why parquet, not `persist()`: Spark's columnar cache is ~20× slower to
   * build on wide array columns (measured round 1); a parquet round-trip is
@@ -16,31 +19,100 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Why cached: several queries share the same intermediate (q23 and q23b
   * read one signature table; the q24 family shares the normed corpus), and
   * the bench harness runs every query twice — recomputing an identical
-  * frame per consumer is pure waste. The key is (session UUID, tag, source
-  * dir) — the UUID via [[graft.SessionToken]], NOT identityHashCode, whose
-  * values are reused after GC and can leak one session's cache entries into
-  * the next. Each tag names one fixed program over an immutable source dir
-  * (the driver testdata is read-only), so the triple identifies the result;
-  * a source dir rewritten mid-session would need a version component here.
-  * (NOT the plan's semanticHash: lambda-bearing plans — `transform`,
-  * `aggregate` — allocate fresh lambda-variable IDs per construction that
+  * frame per consumer is pure waste.
+  *
+  * The key contract: an entry is found under (session, tag, source paths)
+  * and is served only while [[fingerprint]] of every source path still
+  * matches the one it was built under. The session part is
+  * [[graft.SessionToken]], NOT identityHashCode, whose values are reused
+  * after GC and can leak one session's entries into the next. The
+  * fingerprint covers every file under each path (name, length, mtime), so
+  * a part file rewritten in place under the same name rebuilds the entry,
+  * and the rebuilt entry replaces the stale one. Each tag names one fixed
+  * program over its sources, so the key identifies the result. (NOT the
+  * plan's semanticHash: lambda-bearing plans — `transform`, `aggregate` —
+  * allocate fresh lambda-variable IDs per construction that
   * canonicalization does not normalize, so their hash changes every call
-  * and silently defeats the cache.) The frame is by-name: a cache hit never
+  * and silently defeats the cache.) Builds are by-name: a cache hit never
   * builds the plan at all. Entries live for the session; the scratch dirs
   * are tracked by [[graft.TempDirs]] and deleted on JVM exit.
   */
 object Materialize {
 
-  /** key → (scratch dir, the dir's parquet schema as read back once).
-    * The schema is cached because `spark.read.parquet(dir)` without one
-    * runs a footer-inference JOB per call — measured round 16 at ~30 ms
-    * each, and an artifact-heavy query (q24m: 17 materialized reads in its
-    * build) paid ~0.5–1 s of pure frame-CONSTRUCTION wall per execution.
-    * With the schema pinned, a cache hit plans straight off the listing —
-    * zero jobs before the action runs (guide §7.3: driver-side work is
-    * where "nothing is running" time hides). */
-  private val cache = new ConcurrentHashMap[String,
-    (String, org.apache.spark.sql.types.StructType)]()
+  /** (session, tag, source paths) → (fingerprint of the sources, value). */
+  private val store = new ConcurrentHashMap[String, (String, AnyRef)]()
+
+  /** `build`'s value, built once per (session, tag, fingerprint of
+    * `sources`). Check-then-insert, NOT computeIfAbsent: a build may
+    * itself call memo for a dependency (q24d/q24e materialize on top of
+    * the materialized base corpus), and a recursive computeIfAbsent on one
+    * ConcurrentHashMap is forbidden by the JDK — it throws
+    * IllegalStateException("Recursive update") whenever the two keys land
+    * in the same bin. A losing racer adopts the winner's value (its own
+    * scratch is reclaimed on exit); a null value is returned uncached. */
+  def memo[T <: AnyRef](s: SparkSession, tag: String, sources: Seq[String])(
+      build: => T): T = {
+    val (key, fp) = keyOf(s, tag, sources)
+    val hit = store.get(key)
+    if (hit != null && hit._1 == fp) hit._2.asInstanceOf[T]
+    else {
+      val made = build
+      if (made == null) made
+      else store.compute(key, (_, cur) =>
+        if (cur != null && cur._1 == fp) cur else (fp, made))._2.asInstanceOf[T]
+    }
+  }
+
+  /** The value [[memo]] holds for these arguments, without building it. */
+  private def peek(s: SparkSession, tag: String, sources: Seq[String]): Option[AnyRef] = {
+    val (key, fp) = keyOf(s, tag, sources)
+    Option(store.get(key)).filter(_._1 == fp).map(_._2)
+  }
+
+  private def keyOf(s: SparkSession, tag: String, sources: Seq[String]): (String, String) =
+    (s"${graft.SessionToken(s)}|$tag|${sources.mkString(",")}",
+      sources.map(fingerprint(s, _).sig).mkString(","))
+
+  /** What a [[fingerprint]] reads off one listing: `sig` changes whenever
+    * any file under the path is added, removed, resized or touched;
+    * `bytes` is their total size (Long.MaxValue for an unreadable path —
+    * unknown ⇒ assume big). */
+  final case class Fingerprint(sig: String, bytes: Long)
+
+  /** One recursive Hadoop FileSystem listing of `path` (a file or a dir,
+    * local or remote storage), no job. Recurses with `listStatus` rather
+    * than `listFiles(path, recursive = true)`: on the local filesystem
+    * without Hadoop's native library, `listFiles` builds each
+    * LocatedFileStatus through a permission lookup that forks a shell
+    * per file — measured 37 ms per 10-file dir against 0.2 ms here (4-core
+    * x86 host, Hadoop 3.4, local disk). */
+  def fingerprint(s: SparkSession, path: String): Fingerprint =
+    try {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      def files(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+        fs.listStatus(p).toSeq.flatMap(f => if (f.isDirectory) files(f.getPath) else Seq(f))
+      val all = files(root).sortBy(_.getPath.toString)
+      val listing = all.map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      Fingerprint(
+        java.util.UUID.nameUUIDFromBytes(listing.mkString("\n").getBytes("UTF-8")).toString,
+        all.map(_.getLen).sum)
+    } catch { case _: java.io.IOException => Fingerprint("absent", Long.MaxValue) }
+
+  /** `dir` opened with the schema inferred from its footers once per
+    * (session, tag, fingerprint of `sources`). A schemaless
+    * `spark.read.parquet(dir)` runs a footer-inference JOB per call —
+    * measured round 16 at ~30 ms each, and an artifact-heavy query (q24m:
+    * 17 materialized reads in its build) paid ~0.5–1 s of pure
+    * frame-CONSTRUCTION wall per execution. With the schema pinned, a
+    * cache hit plans straight off the listing — zero jobs before the
+    * action runs (guide §7.3). Every pinned read in the engine — source
+    * tables, artifacts, ad-hoc scratch pins — goes through here. */
+  def readPinned(s: SparkSession, tag: String, dir: String,
+                 sources: Seq[String]): DataFrame = {
+    val sch = memo[StructType](s, s"schema|$tag", sources)(s.read.parquet(dir).schema)
+    s.read.schema(sch).parquet(dir)
+  }
 
   def apply(s: SparkSession, srcDir: String, tag: String)(df: => DataFrame): DataFrame =
     write(s, srcDir, tag, Nil)(df)
@@ -77,8 +149,10 @@ object Materialize {
     * at total core count. (Gating on the BUILD FRAME's scan splits — the
     * [[Spread]] rule — is wrong here: a build that reads an earlier
     * multi-file artifact counts ≥ target input splits while its
-    * aggregated OUTPUT still coalesces to one file.) The rebalance runs
-    * once per (session, tag) — in the build, never in a serving read. */
+    * aggregated OUTPUT still coalesces to one file.) The source bytes come
+    * from the same [[fingerprint]] listing that keys the entry. The
+    * rebalance runs once per (session, tag) — in the build, never in a
+    * serving read. */
   def spreadOnWrite(s: SparkSession, srcDir: String, tag: String,
                     key: org.apache.spark.sql.Column)(df: => DataFrame): DataFrame =
     write(s, srcDir, tag, Nil) {
@@ -86,88 +160,95 @@ object Materialize {
       val target = s.sparkContext.defaultParallelism.toLong
       val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-      if (dirBytes(srcDir) >= advisory * target) d
+      if (fingerprint(s, srcDir).bytes >= advisory * target) d
       else d.repartition(target.toInt, key)
     }
 
-  /** Total regular-file bytes under a dir, cached per dir — one stat walk,
-    * no job; the scale signal [[spreadOnWrite]]'s gate reads. */
-  private val dirBytesCache = new ConcurrentHashMap[String, java.lang.Long]()
-  private def dirBytes(dir: String): Long =
-    dirBytesCache.computeIfAbsent(dir, d => {
-      try {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-        try walk
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(p =>
-            try java.nio.file.Files.size(p) catch { case _: Exception => 0L })
-          .sum()
-        finally walk.close()
-      } catch { case _: Exception => Long.MaxValue } // unknown ⇒ assume big
+  /** Session-cached BUCKETED table: the sibling layout for data that must
+    * carry a hash-distribution guarantee into the catalog (plain parquet
+    * files lose it; only a bucketed table's metadata lets the planner trust
+    * `HashPartitioning(bucketCol)` at read time and elide the exchange).
+    * A recurring query keyed on a stable column (baskets per order,
+    * sessions per user) pays its keying shuffle on EVERY run over a flat
+    * table; bucketing moves that shuffle into the one-time layout job — at
+    * 100 TB this is the `CLUSTERED BY` ETL table the co-purchase/behavior
+    * jobs all read, and each run's first aggregation starts map-side.
+    *
+    * The table is EXTERNAL (data under a scratch dir via `option("path")`,
+    * metadata in the session's in-memory catalog) so nothing lands in a
+    * default warehouse under the repo. Table names come from a
+    * process-unique counter (ADVICE r10): a name derived from the key
+    * would send two same-key racers at ONE table (a concurrent overwrite
+    * saveAsTable) and let a hash collision repoint a cached table at
+    * another key's data; a losing racer's table is simply never read. */
+  def bucketed(s: SparkSession, srcDir: String, tag: String, buckets: Int,
+               bucketCol: String)(df: => DataFrame): DataFrame =
+    s.table(memo(s, s"bucketed|$tag|$buckets|$bucketCol", Seq(srcDir)) {
+      val tbl = s"graft_${tag}_${tableSeq.incrementAndGet()}"
+      val dir = graft.TempDirs.create(s"graft_bucket_${tag}_")
+      // ONE file per bucket: without the pre-shuffle every upstream task
+      // writes its own slice of every bucket (tasks × buckets files), and
+      // a bucketed scan only trusts per-bucket sort order when a bucket is
+      // a single file — multi-file buckets force the reader to re-sort
+      // the whole bucket, which at ×20 scale cost q51b's SMJ more than
+      // the exchange it saved. The repartition lives in the one-time
+      // layout job (the nightly ETL writer), never in a read plan.
+      // df is by-name: bind ONCE — a second reference would construct a
+      // fresh plan with new attribute ids that the repartition column
+      // could not resolve against
+      val d = df
+      d.repartition(buckets, d.col(bucketCol))
+        .write
+        .option("path", dir)
+        .bucketBy(buckets, bucketCol)
+        .sortBy(bucketCol)
+        .mode("overwrite")
+        .saveAsTable(tbl)
+      tbl
     })
 
-  /** (session, pinTag) → post-write inferred schema for the ad-hoc pin
-    * sites (distDenseRank's local-rank pin, the SA builders' per-round
-    * scratch, packSlice's per-slice stage table). See [[pinnedRead]]. */
-  private val pinCache = new ConcurrentHashMap[String,
-    org.apache.spark.sql.types.StructType]()
+  private val tableSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Re-open a JUST-WRITTEN parquet dir with a one-time POST-write
-    * inferred schema, cached per (session, pinTag) — the same pattern
-    * [[write]] uses for its tags, packaged for the ad-hoc pin sites that
-    * write scratch parquet outside Materialize (ADVICE r16: those sites
-    * pinned the PRE-write frame's schema onto the re-open, and a parquet
-    * round-trip can change schema metadata — nullability, char/varchar
-    * annotations — so the pinned schema could diverge from what was
-    * actually written). The first write under a pinTag pays ONE footer
-    * job; every later re-open under the same pinTag (later rounds of the
-    * same builder, later slices of the same stream, later runs in the
-    * same session) plans with zero jobs. Correct because a pinTag names
-    * ONE fixed program's output shape — rounds/slices/runs of the same
-    * builder write the same schema. */
-  def pinnedRead(s: SparkSession, pinTag: String, dir: String): DataFrame = {
-    val sch = pinCache.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$pinTag",
-      _ => s.read.parquet(dir).schema)
-    s.read.schema(sch).parquet(dir)
+  /** Write `df` to the scratch `dir`, then re-open it through
+    * [[readPinned]] with the POST-write schema — for the ad-hoc pin sites
+    * outside the tagged artifacts (distDenseRank's local-rank pin, the SA
+    * builders' per-round scratch, packSlice's per-slice stage table). A
+    * parquet round-trip can change schema metadata (nullability,
+    * char/varchar annotations), so the written files, not `df`, say what
+    * to read. The inferred schema is keyed on `pinTag` plus the written
+    * frame's shape (`schema.catalogString`): later rounds, slices and runs
+    * of the same builder plan with zero footer jobs, and a tag reused for
+    * a differently shaped frame infers its own schema instead of misreading
+    * columns. */
+  def pinnedRead(s: SparkSession, pinTag: String, dir: String)(df: DataFrame): DataFrame = {
+    df.write.mode("overwrite").parquet(dir)
+    readPinned(s, s"pin|$pinTag|${df.schema.catalogString}", dir, Nil)
   }
 
   /** The scratch dir backing an ALREADY-BUILT unpartitioned tag, if any —
     * for footer-level statistics (row counts) on the stored table without
     * a counting job. None until the tag's first consumer materializes it. */
   def pathFor(s: SparkSession, srcDir: String, tag: String): Option[String] =
-    Option(cache.get(key(s, srcDir, tag, Nil))).map(_._1)
+    peek(s, artifactTag(tag, Nil), Seq(srcDir)).map(_.asInstanceOf[String])
 
-  /** The one cache-key format, shared by [[write]] and [[pathFor]] — a
+  /** The one artifact-tag format, shared by [[write]] and [[pathFor]] — a
     * format drift between the two would make pathFor silently always-None
     * (and its footer-count consumers fall back to their worst-case sizing
     * bounds, ADVICE r14). */
-  private def key(s: SparkSession, srcDir: String, tag: String,
-                  partCols: Seq[String]): String =
-    s"${graft.SessionToken(s)}|$tag|${partCols.mkString(",")}|$srcDir"
+  private def artifactTag(tag: String, partCols: Seq[String]): String =
+    s"artifact|$tag|${partCols.mkString(",")}"
 
   private def write(s: SparkSession, srcDir: String, tag: String,
                     partCols: Seq[String])(df: => DataFrame): DataFrame = {
-    val key = this.key(s, srcDir, tag, partCols)
-    // check-then-putIfAbsent, NOT computeIfAbsent: building `df` may itself
-    // call Materialize for a dependency (q24d/q24e materialize on top of
-    // the materialized base corpus), and a recursive computeIfAbsent on one
-    // ConcurrentHashMap is forbidden by the JDK — it throws
-    // IllegalStateException("Recursive update") whenever the two keys land
-    // in the same bin. A losing racer just abandons its dir (harness is
-    // effectively single-threaded; dirs are reclaimed on exit regardless).
-    var entry = cache.get(key)
-    if (entry == null) {
+    val t = artifactTag(tag, partCols)
+    val dir = memo(s, t, Seq(srcDir)) {
       val d = graft.TempDirs.create(s"graft_${tag}_")
       val w = df.write.mode("overwrite")
       (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(d)
-      // one inference read (the only footer job this tag ever pays) pins
-      // the WRITTEN schema — including partition-column types discovered
-      // from the directory layout — for every later cache-hit read
-      val made = (d, s.read.parquet(d).schema)
-      val prev = cache.putIfAbsent(key, made)
-      entry = if (prev == null) made else prev
+      d
     }
-    s.read.schema(entry._2).parquet(entry._1)
+    // the pinned schema includes partition-column types discovered from
+    // the directory layout
+    readPinned(s, t, dir, Seq(srcDir))
   }
 }

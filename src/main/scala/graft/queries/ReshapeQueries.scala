@@ -229,7 +229,7 @@ object ReshapeQueries {
     // combined agg would drag all 19 non-distinct aggregate inputs
     // through the multi-distinct Expand — every input row replicated
     // ×(k+1) at full width — measured 5× slower (2.14 s vs 0.43 s warm at
-    // sf0.1, tools/FanoutProbe) than the split, which keeps the Expand
+    // sf0.1, BASELINE.md q37 split-agg rework) than the split, which keeps the Expand
     // over only the 6 distinct columns and the wide battery Expand-free.
     // Multi-column exact DISTINCT still expands the scan ×k — acceptable
     // for a profile job; the 100 TB variant swaps `approx_count_distinct`

@@ -107,7 +107,7 @@ object SimilarityQueries {
   /** SemDeDup's target CLUSTER SIZE — the quantity the production recipe
     * holds constant as the corpus grows (Abbas et al. 2023 fix cluster
     * size, not cluster count). The measured rule (BASELINE.md round 8,
-    * tools/KScaling): fixed k=8 blows up 6.8× on ×20 data (cluster size
+    * k-scaling capture): fixed k=8 blows up 6.8× on ×20 data (cluster size
     * doubles per doubling ⇒ quadratic within-cluster work), while k=16 at
     * ×20 — exactly this constant — returns the curve to 2.6×/doubling.
     * 2500 reproduces those measured points: ceil(n/2500) clamped at KmK
@@ -183,8 +183,8 @@ object SimilarityQueries {
       // lineage-truncation step of iterative Spark algorithms — without
       // it every downstream branch (next iteration's centroids, the
       // final cent/sizes pair) re-executes the whole unrolled chain
-      // non-default k (the KScaling measurement tool) gets its own tags so
-      // it cannot clobber or absorb q24f/q24h's shared artifacts
+      // a non-default k (autoK past 20k vectors) gets its own tags so it
+      // cannot clobber or absorb q24f's fixed-k artifacts
       val tag = if (k == KmK) s"q24f_asg$t" else s"q24f_asg${t}_k$k"
       lastAsg = Materialize(s, dir, tag)(scored
         .groupBy(col("vec_id"))
@@ -197,18 +197,13 @@ object SimilarityQueries {
 
   /** q24h's body: cluster-blocked within-cluster near-dup detection,
     * keep = lowest id per neighborhood, with k derived from the corpus by
-    * [[autoK]] — the production rule IS the code path. The explicit-k
-    * overload exists for the KScaling measurement tool (demonstrating the
-    * fixed-k blow-up requires pinning k): pairwise work is quadratic in
-    * CLUSTER size, so doubling the corpus at fixed k quadruples it, while
-    * k ∝ n restores the cluster size and the cost curve. */
-  private[graft] def semanticDedupFrame(s: SparkSession, dir: String): DataFrame =
-    semanticDedupFrame(s, dir, autoK(s, dir))
-
-  private[graft] def semanticDedupFrame(s: SparkSession, dir: String,
-                                        k: Int): DataFrame = {
+    * [[autoK]] — the production rule IS the code path: pairwise work is
+    * quadratic in CLUSTER size, so doubling the corpus at fixed k
+    * quadruples it, while k ∝ n restores the cluster size and the cost
+    * curve (BASELINE.md round 8). */
+  private[graft] def semanticDedupFrame(s: SparkSession, dir: String): DataFrame = {
     import VecFunctions.vecDot
-    val a = kmFinalAssignments(s, dir, k).select(col("vec_id"), col("cid"))
+    val a = kmFinalAssignments(s, dir, autoK(s, dir)).select(col("vec_id"), col("cid"))
       .join(base(s, dir), "vec_id")
     val lo = a.select(col("vec_id").as("lo_id"), col("cid").as("lo_cid"),
       col("embedding").as("le"), col("nrm").as("ln"))
@@ -423,13 +418,12 @@ object SimilarityQueries {
        |  sqrt(${sqlDot("embedding", "embedding")}) AS nrm FROM embeddings)""".stripMargin
 
   /** Corpus row count for q24c's scale guard, computed once per (session,
-    * dir) from the materialized [[base]] table's parquet footers — the
-    * guard must not add a raw-corpus scan to every run (it is consulted on
-    * both bench passes and by the verify gate). */
-  private val baseCount = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * source state) from the materialized [[base]] table's parquet footers
+    * — the guard must not add a raw-corpus scan to every run (it is
+    * consulted on both bench passes and by the verify gate). */
   private def guardCount(s: SparkSession, dir: String): Long =
-    baseCount.computeIfAbsent(s"${graft.SessionToken(s)}|$dir",
-      _ => java.lang.Long.valueOf(base(s, dir).count())).longValue()
+    Materialize.memo(s, "q24_base_count", Seq(dir))(
+      java.lang.Long.valueOf(base(s, dir).count())).longValue()
 
   /** Brute-force (qid, vec_id, cos) candidate frame: broadcast query set ×
     * full corpus — shared by q24 and the q24g recall evaluation. */
@@ -2025,18 +2019,14 @@ object SimilarityQueries {
         Seq("vec_id")))
     // the probed-cell literal: distinct plabel of the broadcast-sized probe
     // map — router metadata (≤ |coarse cells| values), collected ONCE per
-    // (session, dir) and cached: the probe set is a pure function of the
-    // materialized centroids + query set, and re-collecting it per
+    // (session, source state) and cached: the probe set is a pure function
+    // of the materialized centroids + query set, and re-collecting it per
     // execution would bill every bench pass a driver round-trip
-    val cells = probedCells.computeIfAbsent(
-      s"${graft.SessionToken(s)}|$dir",
-      _ => probeMap(s, dir).select(col("plabel")).distinct()
+    val cells = Materialize.memo(s, "q24m_probed_cells", Seq(dir))(
+      probeMap(s, dir).select(col("plabel")).distinct()
         .collect().map(_.getInt(0)).sorted.toSeq)
     byCell.filter(col("cell").isin(cells.map(Int.box): _*))
   }
-
-  private val probedCells =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]()
 
   // ---- q24p: incremental maintenance of the IVF-PQ index -----------------
 
@@ -2081,9 +2071,6 @@ object SimilarityQueries {
       .select(col("vec_id"), col("label").as("cell"))
   }
 
-  private val q24pCodesDirs = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
   /** The MERGED cell-partitioned codes table (vec_id, m, cid, cell):
     * standing history codes written once partitionBy(cell) (q24m's
     * layout), then tonight's batch PQ-encoded against the FROZEN encCent
@@ -2096,13 +2083,11 @@ object SimilarityQueries {
     * gains one small parquet file per touched cell per night, compaction
     * is q43's job, and a RETRAIN (the only operation that rewrites the
     * standing files) is triggered by q67's drift signal, not by the
-    * append path. Built once per (session, dir); check-then-putIfAbsent
-    * like Materialize (the append must not re-run on a bench re-pass —
-    * it would duplicate batch rows). */
+    * append path. Built once per (session, source state) in the
+    * artifact store (the append must not re-run on a bench re-pass — it
+    * would duplicate batch rows). */
   private[graft] def q24pMergedCodes(s: SparkSession, dir: String): DataFrame = {
-    val key = s"${graft.SessionToken(s)}|$dir"
-    var d = q24pCodesDirs.get(key)
-    if (d == null) {
+    val codes = Materialize.memo(s, "q24p_codes", Seq(dir)) {
       val a = q24pArtifacts(s, dir)
       val dd = graft.TempDirs.create("graft_q24p_codes_")
       a.codes
@@ -2113,14 +2098,10 @@ object SimilarityQueries {
       q24pBatchEncodeFrame(s, dir)
         .repartition(col("cell"))
         .write.mode("append").partitionBy("cell").parquet(dd)
-      // one inference read pins the layout's schema (incl. the discovered
-      // cell partition column) for every later serving read — no
-      // footer-inference job per execution (the Materialize rule)
-      val made = (dd, s.read.parquet(dd).schema)
-      val prev = q24pCodesDirs.putIfAbsent(key, made)
-      d = if (prev == null) made else prev
+      dd
     }
-    s.read.schema(d._2).parquet(d._1)
+    // the pinned schema includes the discovered cell partition column
+    Materialize.readPinned(s, "q24p_codes", codes, Seq(dir))
   }
 
   /** q24p's statically pruned serving scan: the merged codes table
@@ -2129,9 +2110,8 @@ object SimilarityQueries {
     * maintained layout. */
   private[graft] def q24pPrunedCodes(s: SparkSession, dir: String): DataFrame = {
     val merged = q24pMergedCodes(s, dir)
-    val cells = probedCells.computeIfAbsent(
-      s"q24p|${graft.SessionToken(s)}|$dir",
-      _ => probeMapOf(s, dir, q24pCent(s, dir)).select(col("plabel")).distinct()
+    val cells = Materialize.memo(s, "q24p_probed_cells", Seq(dir))(
+      probeMapOf(s, dir, q24pCent(s, dir)).select(col("plabel")).distinct()
         .collect().map(_.getInt(0)).sorted.toSeq)
     merged.filter(col("cell").isin(cells.map(Int.box): _*))
   }
@@ -2178,61 +2158,4 @@ object SimilarityQueries {
       .filter(lit(1.0) - col("neardup_frac") > RetrainNoveltyBar)
       .select(col("source"),
         round(lit(1.0) - col("neardup_frac"), 6).as("novelty_frac"))
-
-  /** Parameterized IVF-PQ serving pair for the production-cell-count
-    * crossover capture (VERDICT r10 #3 / tools.AnnCellScale). The demo
-    * geometry behind q24l/q24m has 10 coarse cells and the 10-query set
-    * probes 80–90% of them, so the partitioned read can never win at toy
-    * scale; HERE cells come from k-means at `nCells` (64–256 — production
-    * coarse-codebook sizes) with `probes` per query, making the probed
-    * fraction ≤ 10% and the layout's I/O-proportionality measurable.
-    * Returns the FLAT (q24l-shape: full codes scan ⋈ cell map ⋈ broadcast
-    * probe) and CELL-PARTITIONED (q24m-shape: statically pruned scan of
-    * codes laid out partitionBy(cell)) executions over the SAME codes,
-    * codebooks, and probe map; both end in the shared ADC + shortlist +
-    * exact re-rank, so their results are identical by construction (the
-    * tool asserts it) and the delta is purely the candidate-generation
-    * read path — the thing the layout changes. */
-  private[graft] def ivfpqAtScale(s: SparkSession, dir: String,
-                                  nCells: Int, probes: Int): (DataFrame, DataFrame) = {
-    import VecFunctions.vecDot
-    import org.apache.spark.sql.expressions.Window
-    val asg = kmFinalAssignments(s, dir, nCells)
-    val cellMap = asg.select(col("vec_id"), col("cid").as("cell"))
-    val cent = Materialize(s, dir, s"xc_cent_k$nCells")(
-      decimalCentroids(asg.select(col("cid"), col("embedding")), "cid")
-        .withColumn("cnrm", sqrt(vecDot(col("cvec"), col("cvec")))))
-    val qs = base(s, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
-        col("nrm").as("qnrm"))
-    val probe = broadcast(qs).crossJoin(broadcast(cent))
-      .withColumn("csim",
-        vecDot(col("cvec"), col("qemb")) / (col("cnrm") * col("qnrm")))
-      .withColumn("pr",
-        row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("csim").desc, col("cid"))))
-      .filter(col("pr") <= probes)
-      .select(col("qid"), col("cid").as("plabel"))
-    val (codes, qtab) = pqArtifacts(s, dir)
-    val flat = codes
-      .join(cellMap, Seq("vec_id"))
-      .join(broadcast(probe), col("cell") === col("plabel"))
-      .join(broadcast(qtab), Seq("qid", "m", "cid"))
-      .select(col("qid"), col("vec_id"), col("m"), col("d"))
-    // clustered write: one task (= one file set) per cell directory — the
-    // layout a production writer produces; without the repartition the 32
-    // shuffle tasks each spray rows into every probed dir and the
-    // partitioned table's encoding (many tiny unsorted files) is unfairly
-    // worse than the flat table's
-    val byCell = Materialize.partitioned(s, dir, s"xc_codes_by_cell_k$nCells",
-      Seq("cell"))(codes.join(cellMap, Seq("vec_id")).repartition(col("cell")))
-    // probed-cell literal: ≤ nCells·probes router-metadata values
-    val cells = probe.select(col("plabel")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val pruned = byCell.filter(col("cell").isin(cells.map(Long.box): _*))
-      .join(broadcast(probe), col("cell") === col("plabel"))
-      .join(broadcast(qtab), Seq("qid", "m", "cid"))
-      .select(col("qid"), col("vec_id"), col("m"), col("d"))
-    (pqAdcSearch(s, dir, flat), pqAdcSearch(s, dir, pruned))
-  }
 }

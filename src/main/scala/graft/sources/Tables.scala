@@ -19,32 +19,16 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** (session, dir, table, file fingerprint) → inferred parquet schema,
-    * cached: a schemaless `read.parquet` runs a footer-inference job
-    * (~30 ms) on EVERY call, and a query build references these tables
-    * several times — measured round 16 as a visible slice of per-query
-    * frame-construction wall. The testdata is immutable for a session
-    * (driver contract); the key additionally folds in the path's
-    * size+mtime fingerprint (ADVICE r16) so a testdata dir regenerated
-    * while a session lives re-infers instead of silently misreading the
-    * new data through a stale schema. One stat call per lookup — no job. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def fingerprint(path: String): String =
-    try {
-      val a = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(path),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      s"${a.size}:${a.lastModifiedTime.toMillis}"
-    } catch { case _: Exception => "absent" }
-
+  /** A testdata table opened with its schema inferred once per (session,
+    * path, file fingerprint) — see [[graft.queries.Materialize.readPinned]]:
+    * a schemaless `read.parquet` runs a footer-inference job (~30 ms) on
+    * EVERY call, and a query build references these tables several times.
+    * The fingerprint lists every file under the path, so a table
+    * regenerated while a session lives (even a part file rewritten in
+    * place) re-infers instead of misreading the new data. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(
-      s"${graft.SessionToken(spark)}|$path|${fingerprint(path)}",
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
+    graft.queries.Materialize.readPinned(spark, "table", path, Seq(path))
   }
 
   /** events.ts arrives in one of two parquet encodings depending on the

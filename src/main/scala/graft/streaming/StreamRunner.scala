@@ -25,46 +25,27 @@ object StreamRunner {
   private def tempDir(tag: String): String =
     graft.TempDirs.create(s"graft_${tag}_${n.incrementAndGet()}_")
 
-  /** Replay-source dirs, shared across queries: several streaming queries
-    * replay the same bounded table, so the materialization is written once
-    * per (session, source, shape) and re-read by every query (each query
-    * still gets its own checkpoint/sink). */
-  private val replayCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** File-level signature of every file-source relation under `df`'s plan
-    * (root paths plus their files' names, sizes, mtimes). Replay keys
-    * include it because the logical plan's semanticHash sees only the
-    * PATH: regenerating a source in place (even preserving max(ts)) would
-    * otherwise leave every key unchanged and silently replay the stale
-    * slice materialization of the old data. */
-  private def sourceSig(df: DataFrame): Int = {
+  /** Replay-source dirs live in the session artifact store
+    * ([[graft.queries.Materialize.memo]]), shared across queries: several
+    * streaming queries replay the same bounded table, so the
+    * materialization is written once per (session, shape, plan, source
+    * state) and re-read by every query (each query still gets its own
+    * checkpoint/sink). The logical plan's semanticHash sees only a
+    * source's PATH, so the key's sources are the plan's file-relation
+    * roots: the store fingerprints every file under them, and a source
+    * regenerated in place (even preserving max(ts)) re-materializes
+    * instead of replaying the stale slices of the old data. */
+  private def replayDir(tag: String, frames: Seq[DataFrame])(write: => String): String = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val roots = df.queryExecution.analyzed.collect {
+    val shape = frames.map(df => s"${df.schema.catalogString}|" +
+      df.queryExecution.logical.canonicalized.semanticHash()).mkString("+")
+    val roots = frames.flatMap(_.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toUri.getPath)
-        case _ => Seq.empty[String]
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+        case _ => Nil
       }
-    }.flatten.sorted
-    roots.map { p =>
-      val root = java.nio.file.Paths.get(p)
-      // full recursive walk, not a root-level listing: a partitioned layout
-      // (day=*/part-*.parquet) exposes only subdir names at the root, so a
-      // nested part file rewritten in place under the same name would leave
-      // a shallow signature unchanged — the exact staleness this guards
-      val files: Seq[java.nio.file.Path] =
-        if (java.nio.file.Files.isDirectory(root)) {
-          val walk = java.nio.file.Files.walk(root)
-          try {
-            val b = Seq.newBuilder[java.nio.file.Path]
-            walk.filter(java.nio.file.Files.isRegularFile(_)).forEach(b += _)
-            b.result().sortBy(_.toString)
-          } finally walk.close()
-        } else Seq(root)
-      files.map { f =>
-        val file = f.toFile
-        s"${f.toAbsolutePath}:${file.length}:${file.lastModified}"
-      }.mkString("|")
-    }.mkString("||").hashCode
+    }.flatten).distinct.sorted
+    graft.queries.Materialize.memo(frames.head.sparkSession, s"$tag|$shape", roots)(write)
   }
 
   /** Materialize a bounded frame and re-open it as a parquet file stream.
@@ -73,19 +54,12 @@ object StreamRunner {
     * to compare 1:1 with batch, e.g. flatMapGroupsWithState). */
   def replay(spark: SparkSession, df: DataFrame, tag: String,
              singleFile: Boolean = false): DataFrame = {
-    // pre-merge session windows map-side before the state-store shuffle
-    // (measured 4× on session-window aggregation; correctness unchanged)
-    spark.conf.set(
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
-    val key = s"${graft.SessionToken(spark)}|${df.schema.catalogString}|" +
-      s"${df.queryExecution.logical.canonicalized.semanticHash()}|" +
-      s"${sourceSig(df)}|$singleFile"
-    val dir = replayCache.computeIfAbsent(key, { _ =>
+    val dir = replayDir(s"replay|$singleFile", Seq(df)) {
       val d = tempDir(s"replay_$tag")
       val w = if (singleFile) df.coalesce(1) else df
       w.write.mode("overwrite").parquet(d)
       d
-    })
+    }
     spark.readStream.schema(df.schema).parquet(dir)
   }
 
@@ -102,14 +76,11 @@ object StreamRunner {
     // an identical bounded frame per pass is pure write waste — the slice
     // files' strictly-increasing mtimes (SliceStamper) replay in the same
     // order from a reused dir
-    val key = s"${graft.SessionToken(spark)}|paced|${df.schema.catalogString}|" +
-      s"${df.queryExecution.logical.canonicalized.semanticHash()}|" +
-      s"${sourceSig(df)}|$tsCol|$slices"
-    val dir = replayCache.computeIfAbsent(key, { _ =>
+    val dir = replayDir(s"paced|$tsCol|$slices", Seq(df)) {
       val d = tempDir(s"paced_$tag")
       writePacedSlices(df, tsCol, slices, d)
       d
-    })
+    }
     spark.readStream
       .schema(df.schema)
       .option("maxFilesPerTrigger", "1")
@@ -273,18 +244,13 @@ object StreamRunner {
     * for free from continuing traffic, a bounded replay must punctuate.
     * Returns the dir; call `openSlices` once per required source instance
     * (twice for a self-join's two sides). */
-  def writeSlices(slices: Seq[DataFrame], tag: String): String = {
-    val key = slices.map(s => s"${graft.SessionToken(s.sparkSession)}|" +
-      s"${s.schema.catalogString}|" +
-      s"${s.queryExecution.logical.canonicalized.semanticHash()}|" +
-      s"${sourceSig(s)}").mkString("+")
-    replayCache.computeIfAbsent(key, { _ =>
+  def writeSlices(slices: Seq[DataFrame], tag: String): String =
+    replayDir("slices", slices) {
       val dir = tempDir(s"slices_$tag")
       val stamper = new SliceStamper(dir)
       slices.foreach(s => commitSlice(s, dir, stamper))
       dir
-    })
-  }
+    }
 
   def openSlices(spark: SparkSession, dir: String,
                  schema: org.apache.spark.sql.types.StructType): DataFrame =

@@ -704,4 +704,20 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("graft_q24d_sig_"), p)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
+
+  test("Spread: a single-file scan broadcast-joined to a tiny frame is still spread") {
+    // a broadcast exchange leaves the scan on its own file splits, so only
+    // a SHUFFLE exchange may turn the spread off
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val tiny = spark.range(3).select(col("id").as("rk"))
+    val joined = Tables.nation(spark, sf)
+      .join(org.apache.spark.sql.functions.broadcast(tiny), col("n_regionkey") === col("rk"))
+    val before = joined.queryExecution.executedPlan.toString
+    assert(before.contains("BroadcastExchange"), before)
+    assert(graft.queries.Spread.scanParallelism(joined) * 2 < spark.sparkContext.defaultParallelism)
+    val spread = graft.queries.Spread(joined, col("n_nationkey"))
+    assert(spread.queryExecution.sparkPlan.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      spread.queryExecution.sparkPlan.toString)
+    assert(spread.count() === joined.count())
+  }
 }

@@ -159,9 +159,9 @@ class ScaleOpsSpec extends SparkSpec {
     // the layout job must run ONCE per session: a second request for the
     // same tag returns the same catalog table (no rebuild), and the scan
     // it yields reports bucketing to the planner
-    val a = graft.queries.Bucketed(spark, sf, "spec_bucket_cache", 4, "n_nationkey")(
+    val a = graft.queries.Materialize.bucketed(spark, sf, "spec_bucket_cache", 4, "n_nationkey")(
       Tables.nation(spark, sf))
-    val b = graft.queries.Bucketed(spark, sf, "spec_bucket_cache", 4, "n_nationkey")(
+    val b = graft.queries.Materialize.bucketed(spark, sf, "spec_bucket_cache", 4, "n_nationkey")(
       fail("second request must hit the cache, not rebuild"))
     assert(a.count() === b.count())
     val scan = b.queryExecution.executedPlan.collectLeaves()

@@ -4,7 +4,8 @@
 Reads each SparkEntry query result (parquet, written by graft.Verify) and the
 oracle_sql.json it dumps, runs each oracle statement in DuckDB with the
 testdata tables registered as views, canonicalizes both sides (columns sorted
-by name, rows sorted, NaN-safe) and diffs values exactly.
+by name, rows sorted, NaN-safe) and diffs values exactly. Every query named
+in failures.json (written by graft.Verify: query -> message) counts as failed.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
@@ -40,8 +41,17 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    try:
+        failures = json.load(open(f"{out_dir}/failures.json"))
+    except FileNotFoundError:
+        failures = {}
     n_ok = n_bad = 0
+    for name, msg in sorted(failures.items()):
+        print(f"FAIL {name}: verify failed: {msg}")
+        n_bad += 1
     for name, sql in sorted(oracle.items()):
+        if name in failures:
+            continue
         try:
             got = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
             gcols, grows = canon(got.fetchall(), got.columns)
