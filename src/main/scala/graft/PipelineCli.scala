@@ -83,7 +83,7 @@ object BatchPipelineCli {
   *   - `--perEvent true` (simulate_session_stream.py's per-event Δt loop) —
   *     one micro-batch per distinct event time, in event-time order; the
   *     reference's inter-event sleep becomes commit order
-  *     ([[StreamRunner.writePerEventSlices]]).
+  *     ([[StreamRunner.perEventSlices]]).
   * Mutually exclusive, like the two reference scripts.
   */
 object ReplayPipelineCli {
@@ -93,10 +93,14 @@ object ReplayPipelineCli {
       "[--wallclock true [--minuteMs <ms>]] " +
       "[--topic <name> --subscription <name> [--channelRoot <dir>]]"
 
-  /** Slice count for a data span and speedFactor, bounded to [1, 96] so a
-    * months-long file cannot demand thousands of micro-batches. */
+  /** Micro-batch bound for both pacing modes: a months-long file cannot
+    * demand thousands of micro-batches. */
+  private val MaxBatches = 96
+
+  /** Slice count for a data span and speedFactor, bounded to
+    * [1, [[MaxBatches]]]. */
   def sliceCount(spanHours: Double, speedFactor: Int): Int =
-    math.min(96, math.max(1, math.ceil(spanHours / speedFactor).toInt))
+    math.min(MaxBatches, math.max(1, math.ceil(spanHours / speedFactor).toInt))
 
   def main(args: Array[String]): Unit = {
     val kv = CliArgs.parse(args,
@@ -135,12 +139,11 @@ object ReplayPipelineCli {
       try_to_timestamp(col("event_time"), lit("yyyy-MM-dd HH:mm:ss zzz"))
         .as("__pace_ts"),
       EcommerceOps.encodeMessage(cols.map(col).toIndexedSeq).as("value"))
-    // fail fast on rows the pacing key can't be derived from: a null
-    // __pace_ts would silently fall out of EVERY quantile slice filter in
-    // writePacedSlices (null comparisons), vanishing from the sink — and an
-    // all-null/empty input would NPE on the span aggregate below. The
-    // reference's strptime loop dies on the first bad row; one clear error
-    // listing the count beats both failure shapes.
+    // fail fast on rows the pacing key can't be derived from, naming the
+    // input format: the slicers refuse a null __pace_ts too, but only as a
+    // null, and an all-null/empty input would NPE on the span aggregate
+    // below. The reference's strptime loop dies on the first bad row; one
+    // clear error listing the count beats both failure shapes.
     val Row(total: Long, parsed: Long, spanOrNull) = messages
       .select(count(lit(1)), count(col("__pace_ts")),
         (unix_timestamp(max(col("__pace_ts"))) -
@@ -166,16 +169,16 @@ object ReplayPipelineCli {
           kv.getOrElse("channelRoot", TempDirs.create("graft_channels_")))
         ch.createTopic(topic)
         ch.createSubscription(sub, topic)
-        val wire = messages.select(col("value"), col("__pace_ts"))
-        val n =
-          if (perEvent) ch.publishPerEvent(wire, "__pace_ts", topic)
-          else { ch.publishPaced(wire, "__pace_ts", slices, topic); slices }
+        val paced =
+          if (perEvent) StreamRunner.perEventSlices(messages, "__pace_ts", MaxBatches)
+          else StreamRunner.quantileSlices(messages, "__pace_ts", slices)
+        ch.publish(topic, paced.map(_.drop("__pace_ts")))
         println(s"[replay] created topic $topic, subscription $sub")
         val (df, checkpoint) = ch.open(spark, sub)
-        (df, Some(checkpoint), n)
+        (df, Some(checkpoint), paced.length)
       case None if perEvent =>
         val (df, n) = StreamRunner
-          .replayPerEvent(spark, messages, "__pace_ts", "cli_replay")
+          .replayPerEvent(spark, messages, "__pace_ts", "cli_replay", MaxBatches)
         (df.drop("__pace_ts"), None, n)
       case None =>
         (StreamRunner

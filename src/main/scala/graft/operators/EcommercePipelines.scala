@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.sources.Ecommerce
-import graft.streaming.StreamRunner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,11 +12,12 @@ import org.apache.spark.sql.functions._
   *     plan: scan → stringify/dict-pack/record-id → parquet append. No
   *     driver materialization anywhere — the 100 TB constraint.
   *
-  *   - [[runStream]] ≙ `send_session_stream.py` + `write_session_stream.py`:
-  *     rows → comma-joined UTF-8 messages (the Pub/Sub wire format, S4) →
-  *     streaming decode (S5) → per-event transform (T2) → append sink (T3),
-  *     on Structured Streaming with a deterministic replay instead of
-  *     wall-clock pacing (§3.2).
+  *   - the streaming pipeline ≙ `send_session_stream.py` +
+  *     `write_session_stream.py` is `graft.ReplayPipelineCli`: rows →
+  *     comma-joined UTF-8 messages (the Pub/Sub wire format, S4) → paced
+  *     replay → [[decodeWire]] (S5) → per-event transform (T2) → append
+  *     sink (T3), on Structured Streaming with a deterministic replay
+  *     instead of wall-clock pacing (§3.2).
   */
 object EcommercePipelines {
 
@@ -75,20 +75,6 @@ object EcommercePipelines {
     * dimension/result tables; large reads would set partitionColumn). */
   def readOltp(spark: SparkSession, url: String, table: String): DataFrame =
     spark.read.jdbc(url, table, new java.util.Properties())
-
-  /** Streaming pipeline over the wire format: encode each row as the
-    * replay scripts do, stream the messages, decode + transform per event,
-    * append to the sink. Returns the final sink contents. */
-  def runStream(spark: SparkSession, csvPath: String): DataFrame = {
-    val cols = Ecommerce.schema.fieldNames
-    // S4 — the replay encoder's comma-joined UTF-8 message per event
-    val messages = Ecommerce.readCsv(spark, csvPath)
-      .select(EcommerceOps.encodeMessage(cols.map(col).toIndexedSeq).as("value"))
-    val stream = StreamRunner.replay(spark, messages, "ecom_wire")
-    // T2 — the Beam DoFn's per-event transform, stateless
-    val transformed = EcommerceOps.streamTransform(decodeWire(stream))
-    StreamRunner.toParquet(spark, transformed, "ecom_sink")
-  }
 
   /** S5 — decode the wire `value` column back into the 9 event fields. The
     * whitespace-collapse split event_time into 3 fields (date, time, "UTC");

@@ -638,51 +638,35 @@ object CurationPipeline {
     val outRoot = graft.TempDirs.create("graft_q45c_out_")
     val stateRoot = graft.TempDirs.create("graft_q45c_state_")
     val chk = graft.TempDirs.create("graft_q45c_chk_")
-    // transformWithState requires the RocksDB provider; the conf is
-    // SESSION-GLOBAL (no per-query writeStream option exists for it in
-    // this Spark), so any OTHER streaming query started while this run is
-    // in flight would silently pick up RocksDB — and the finally-block's
-    // StateStore.stop() unloads providers session-wide (ADVICE r15). The
-    // engine executes queries sequentially (Verify/Bench/specs all run
-    // one query at a time), which this swap-and-restore depends on; a
-    // concurrent-streaming caller must scope sessions per query instead.
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(pk)
-    s.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the engine-stateful dedup rides the STREAM, ahead of foreachBatch:
-      // each micro-batch delivers only keys never seen by any earlier
-      // slice, first-wins keeper per key
-      val deduped = sdf.drop("dts")
-        .select(col("doc_id"), col("lang"), col("text"),
-          sha2(key, 256).as("kh"))
-        .as[(Long, String, String, String)]
-        .groupByKey(_._4)
-        .transformWithState(new graft.streaming.SeenKeyKeeperProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("doc_id", "lang", "text")
-      StreamRunner.runBatches(s, deduped, "q45c", flush = false,
-          checkpoint = Some(chk)) { (slice0, id) =>
-        val ss = slice0.sparkSession
-        val slice = slice0.withColumn("k", key)
-        val sketch = slice.select(xxhash64(col("k")).as("skh"))
-          .agg(graft.functions.SketchFunctions
-            .bloomSketchAgg(col("skh"), math.max(1000L, 2L * BatchTarget), 0.01)
-            .as("sk"))
-          .scalar()
-        val histCand = histK.select(key.as("hk"))
-          .filter(graft.functions.SketchFunctions.bloomMightContain(
-            sketch, xxhash64(col("hk"))))
-        val kept = slice
-          .join(broadcast(histCand), col("k") === col("hk"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("text"))
-        packSlice(ss, kept, id, outRoot, stateRoot, bp,
-          baseBefore(ss, stateRoot, id, base0))
-      }
-    } finally {
-      prev.fold(s.conf.unset(pk))(v => s.conf.set(pk, v))
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    // the engine-stateful dedup rides the STREAM, ahead of foreachBatch:
+    // each micro-batch delivers only keys never seen by any earlier
+    // slice, first-wins keeper per key (the run sets the RocksDB provider
+    // transformWithState requires)
+    val deduped = sdf.drop("dts")
+      .select(col("doc_id"), col("lang"), col("text"),
+        sha2(key, 256).as("kh"))
+      .as[(Long, String, String, String)]
+      .groupByKey(_._4)
+      .transformWithState(new graft.streaming.SeenKeyKeeperProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("doc_id", "lang", "text")
+    StreamRunner.runBatches(s, deduped, "q45c", flush = false,
+        checkpoint = Some(chk)) { (slice0, id) =>
+      val ss = slice0.sparkSession
+      val slice = slice0.withColumn("k", key)
+      val sketch = slice.select(xxhash64(col("k")).as("skh"))
+        .agg(graft.functions.SketchFunctions
+          .bloomSketchAgg(col("skh"), math.max(1000L, 2L * BatchTarget), 0.01)
+          .as("sk"))
+        .scalar()
+      val histCand = histK.select(key.as("hk"))
+        .filter(graft.functions.SketchFunctions.bloomMightContain(
+          sketch, xxhash64(col("hk"))))
+      val kept = slice
+        .join(broadcast(histCand), col("k") === col("hk"), "left_anti")
+        .select(col("doc_id"), col("lang"), col("text"))
+      packSlice(ss, kept, id, outRoot, stateRoot, bp,
+        baseBefore(ss, stateRoot, id, base0))
     }
     readPacked(s, outRoot)
   }

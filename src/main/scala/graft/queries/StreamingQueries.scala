@@ -54,7 +54,7 @@ object StreamingQueries {
   val defs: Seq[QueryDef] = Seq(
     // T1-T3/Q19 — unbounded ingest + stateless per-event transform + append
     // sink (the reference's Beam pipeline, write_session_stream.py:100-113,
-    // as readStream → select → parquet sink).
+    // as file-stream source → select → parquet sink).
     QueryDef(
       "q19_stream_pipeline",
       """SELECT event_id, event_type,
@@ -424,24 +424,16 @@ object StreamingQueries {
       import s.implicits._
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), sha2(lower(trim(col("text"))), 256).as("sha"))
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val stream = StreamRunner.replay(s, docs, "q29b", singleFile = true)
-          .as[(Long, String)]
-          .groupByKey(_._2)
-          .transformWithState(
-            new graft.streaming.DedupAttributionProcessor,
-            TimeMode.None(), OutputMode.Append())
-          .toDF("doc_id", "dup_of", "is_dup")
-        StreamRunner.toParquet(s, stream, "q29b", flush = false).orderBy("doc_id")
-      } finally {
-        prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
-        // unload the RocksDB providers so later queries get default state
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      }
+      // the run sets the RocksDB provider itself: the plan has a
+      // transformWithState node
+      val stream = StreamRunner.replay(s, docs, "q29b", singleFile = true)
+        .as[(Long, String)]
+        .groupByKey(_._2)
+        .transformWithState(
+          new graft.streaming.DedupAttributionProcessor,
+          TimeMode.None(), OutputMode.Append())
+        .toDF("doc_id", "dup_of", "is_dup")
+      StreamRunner.toParquet(s, stream, "q29b", flush = false).orderBy("doc_id")
     },
 
     // T7/Q21b — per-user funnel state machine via flatMapGroupsWithState:

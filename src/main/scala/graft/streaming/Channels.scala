@@ -5,8 +5,7 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 
 /** Message-channel admin lifecycle — the Spark-native analogue of the
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   * Mapping, concept for concept:
   *   - **topic** → an append-only directory of message files. Publishing is
   *     a file commit; file modification-time order is publish order (the
-  *     same contract [[StreamRunner.writePacedSlices]] relies on).
+  *     same contract [[StreamRunner.commitSlices]] writes).
   *   - **subscription** → a named, topic-bound streaming checkpoint. Every
   *     subscription reads the whole topic independently (Pub/Sub fan-out)
   *     and its checkpoint carries its own delivery cursor: a drain delivers
@@ -47,7 +46,7 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   *
   * SINGLE WRITER PER TOPIC: publish order is serialized by the mtime
   * stamper, which derives its base from a snapshot of the dir listing at
-  * publish time ([[StreamRunner.writeOrderedCommit]]) — two publishers
+  * publish time ([[StreamRunner.commitSlices]]) — two publishers
   * stamping the same topic concurrently can snapshot the same base and
   * emit colliding/interleaved mtimes, making cross-publisher replay order
   * arbitrary. Concurrent publishers must serialize externally (one
@@ -140,56 +139,25 @@ final case class Channels(root: String) {
 
   // --- data path -------------------------------------------------------
 
-  private def requireWire(messages: DataFrame): Unit =
-    require(
-      messages.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        Seq(("value", BinaryType)),
-      s"messages must be (value: binary), got ${messages.schema.catalogString}")
-
-  /** Publish a frame of wire messages (single binary `value` column) as one
-    * ordered file commit — the bulk analogue of the reference's per-event
-    * `publisher.publish` loop. */
-  def publish(messages: DataFrame, topic: String): Unit = {
+  /** Publish wire-message slices (single binary `value` column each) to
+    * `topic` as ordered file commits, one per slice, after everything
+    * already there. `Seq(messages)` is the bulk analogue of the reference's
+    * per-event `publisher.publish` loop; the paced publishers are
+    * [[StreamRunner.quantileSlices]] / [[StreamRunner.perEventSlices]] of
+    * the messages with their pace column dropped (pacing metadata, NOT
+    * written to the wire). */
+  def publish(topic: String, slices: Seq[DataFrame]): Unit = {
     val d = topicDir(topic)
     require(Files.exists(d), s"topic $topic not found")
-    requireWire(messages)
-    // stamped, not a plain write: paced publishes stamp their slices ahead
-    // of the wall clock, so an unstamped bulk commit could sort BETWEEN
-    // earlier paced slices and break "mtime order is publish order"
-    StreamRunner.writeOrderedCommit(messages, d.toString)
-  }
-
-  /** Paced publish: split `messages` into `slices` event-time-ordered
-    * commits keyed by `paceTs` (pacing metadata, NOT written to the wire)
-    * — the deterministic analogue of the reference's wall-clock-paced
-    * publishing loop. */
-  def publishPaced(messages: DataFrame, paceTs: String, slices: Int,
-                   topic: String): Unit = {
-    val d = topicDir(topic)
-    require(Files.exists(d), s"topic $topic not found")
-    require(messages.columns.toSet == Set("value", paceTs),
-      s"expected (value, $paceTs), got ${messages.columns.mkString(",")}")
-    StreamRunner.writePacedSlices(messages, paceTs, slices, d.toString,
-      dropCols = Seq(paceTs))
-  }
-
-  /** Per-event-Δt publish — the reference's simulate_session_stream.py
-    * publish loop (one `publisher.publish` per event, sleeping each
-    * inter-event gap): one commit per distinct `paceTs` value, ascending.
-    * Returns the commit count. */
-  def publishPerEvent(messages: DataFrame, paceTs: String, topic: String,
-                      maxTimes: Int = 96): Int = {
-    val d = topicDir(topic)
-    require(Files.exists(d), s"topic $topic not found")
-    require(messages.columns.toSet == Set("value", paceTs),
-      s"expected (value, $paceTs), got ${messages.columns.mkString(",")}")
-    StreamRunner.writePerEventSlices(messages, paceTs, d.toString, maxTimes,
-      dropCols = Seq(paceTs))
+    for (s <- slices) require(
+      s.schema.fields.map(f => (f.name, f.dataType)).toSeq == Seq(("value", BinaryType)),
+      s"messages must be (value: binary), got ${s.schema.catalogString}")
+    StreamRunner.commitSlices(d.toString, slices)
   }
 
   /** Open a subscription as a streaming frame (one publish commit = one
-    * micro-batch under `maxFilesPerTrigger=1`) plus the checkpoint path
-    * that is its durable delivery cursor. */
+    * micro-batch) plus the checkpoint path that is its durable delivery
+    * cursor. */
   def open(spark: SparkSession, subscription: String): (DataFrame, String) = {
     val d = subDir(subscription)
     require(Files.exists(d), s"subscription $subscription not found")
@@ -197,11 +165,8 @@ final case class Channels(root: String) {
     val td = topicDir(topic)
     require(Files.exists(td), s"topic $topic (bound by $subscription) not found")
     requireSameIncarnation(subscription, topic)
-    val stream = spark.readStream
-      .schema(messageSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(td.toString)
-    (stream, d.resolve("checkpoint").toString)
+    (StreamRunner.openSlices(spark, td.toString, messageSchema),
+      d.resolve("checkpoint").toString)
   }
 
   /** Drain every message published since this subscription's last drain
@@ -212,26 +177,16 @@ final case class Channels(root: String) {
     * offsets. Draining a subscription whose topic was deleted delivers
     * nothing new and keeps what was already consumed (the detached-
     * subscription contract: it "just stops receiving" — the deleted
-    * topic's UNDELIVERED backlog is gone with its directory). */
+    * topic's UNDELIVERED backlog is gone with its directory). The run's
+    * plan is kept under the tag `drain_<subscription>`. */
   def drain(spark: SparkSession, subscription: String, outDir: String): DataFrame = {
     val d = subDir(subscription)
     require(Files.exists(d), s"subscription $subscription not found")
-    if (!Files.exists(topicDir(Files.readString(d.resolve("TOPIC")))))
-      return sinkContents(spark, outDir)
-    val (stream, checkpoint) = open(spark, subscription)
-    val q = stream.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sinkContents(spark, outDir)
+    if (Files.exists(topicDir(Files.readString(d.resolve("TOPIC"))))) {
+      val (stream, checkpoint) = open(spark, subscription)
+      StreamRunner.run(stream, s"drain_$subscription", Some(checkpoint),
+        flush = true, _ => false)(StreamRunner.parquetSink(outDir))
+    }
+    StreamRunner.readSink(spark, outDir, messageSchema)
   }
-
-  private def sinkContents(spark: SparkSession, outDir: String): DataFrame =
-    if (Files.exists(Paths.get(outDir)))
-      spark.read.schema(messageSchema).parquet(outDir)
-    else // nothing ever delivered: the sink dir was never created
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], messageSchema)
 }

@@ -2,21 +2,34 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.execution.streaming.state.StateStore
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
-/** Test/driver harness for the streaming operators (SURVEY.md §2.9, §3.2-3.3):
-  * replays a bounded table as a file stream and runs a Structured Streaming
-  * query to completion with `Trigger.AvailableNow`, so streaming results are
-  * plain DataFrames the correctness gate can compare against batch oracles.
+/** The one streaming path (SURVEY.md §2.9, §3.2-3.3), two halves:
+  *
+  *   - an ORDERED-COMMIT SOURCE: a slicing rule ([[quantileSlices]],
+  *     [[perEventSlices]], or caller-built slices) → [[commitSlices]] (one
+  *     file commit per slice, mtime order = slice order) → [[openSlices]]
+  *     (one commit per micro-batch). The replays and [[Channels]] topics
+  *     are compositions of these pieces.
+  *   - one RUN LIFECYCLE ([[run]]): session confs overridden and restored,
+  *     query started, bounded wait, last plan captured, state stores
+  *     unloaded. [[toParquet]], [[toUpsert]], [[runBatches]],
+  *     [[toParquetWallclock]] and [[Channels.drain]] differ only in the
+  *     writer they configure.
   *
   * This replaces the reference's wall-clock replay scripts
   * (streaming_pipeline/send_session_stream.py:82-83,
   * simulate_session_stream.py:89-93): correctness comes from event-time
-  * processing + watermarks, not arrival pacing, so tests drive the stream
-  * deterministically instead of sleeping. `speedFactor`/pacing map to
-  * trigger configuration in production.
+  * processing + watermarks, not arrival pacing, so bounded frames replay
+  * deterministically under `Trigger.AvailableNow` and streaming results are
+  * plain DataFrames the correctness gate can compare against batch oracles
+  * (replayable file sources are what make the runs exactly-once —
+  * *Structured Streaming*, SIGMOD 2018).
   */
 object StreamRunner {
 
@@ -24,6 +37,8 @@ object StreamRunner {
 
   private def tempDir(tag: String): String =
     graft.TempDirs.create(s"graft_${tag}_${n.incrementAndGet()}_")
+
+  // --- ordered-commit source -------------------------------------------
 
   /** Replay-source dirs live in the session artifact store
     * ([[graft.queries.Materialize.memo]]), shared across queries: several
@@ -48,6 +63,13 @@ object StreamRunner {
     graft.queries.Materialize.memo(frames.head.sparkSession, s"$tag|$shape", roots)(write)
   }
 
+  /** A fresh scratch dir holding `slices` as ordered commits. */
+  private def commitTo(prefix: String, slices: Seq[DataFrame]): String = {
+    val d = tempDir(prefix)
+    commitSlices(d, slices)
+    d
+  }
+
   /** Materialize a bounded frame and re-open it as a parquet file stream.
     * `singleFile=true` forces one input file so `AvailableNow` runs exactly
     * one micro-batch (required by operators whose emission the harness wants
@@ -63,38 +85,107 @@ object StreamRunner {
     spark.readStream.schema(df.schema).parquet(dir)
   }
 
-  /** T4 — event-time-paced replay: split the table into `slices` time-ordered
-    * files and feed ONE slice per micro-batch (`maxFilesPerTrigger=1`), so a
-    * downstream query processes the stream incrementally in event-time order
-    * — the deterministic stand-in for the reference's wall-clock-paced
-    * publisher (simulate_session_stream.py:89-93); `speedFactor` maps to
-    * slice count / trigger rate, not to sleeps. */
+  /** T4 — event-time-paced replay: [[quantileSlices]], one slice per
+    * micro-batch, so a downstream query processes the stream incrementally
+    * in event-time order — the deterministic stand-in for the reference's
+    * wall-clock-paced publisher (simulate_session_stream.py:89-93);
+    * `speedFactor` maps to slice count / trigger rate, not to sleeps.
+    * Stored like [[replay]] (same key discipline, + the slice shape): the
+    * bench harness replays each paced query three times, and the slice
+    * files' strictly-increasing mtimes replay in the same order from a
+    * reused dir. */
   def replayPaced(spark: SparkSession, df: DataFrame, tsCol: String,
-                  slices: Int, tag: String): DataFrame = {
-    // cached like [[replay]] (same key discipline, + the slice shape): the
-    // bench harness replays each paced query three times, and re-slicing
-    // an identical bounded frame per pass is pure write waste — the slice
-    // files' strictly-increasing mtimes (SliceStamper) replay in the same
-    // order from a reused dir
-    val dir = replayDir(s"paced|$tsCol|$slices", Seq(df)) {
-      val d = tempDir(s"paced_$tag")
-      writePacedSlices(df, tsCol, slices, d)
-      d
+                  slices: Int, tag: String): DataFrame =
+    openSlices(spark, replayDir(s"paced|$tsCol|$slices", Seq(df))(
+      commitTo(s"paced_$tag", quantileSlices(df, tsCol, slices))), df.schema)
+
+  /** Per-event replay: [[perEventSlices]] into a scratch dir, one commit
+    * per micro-batch; returns (stream, micro-batch count). */
+  def replayPerEvent(spark: SparkSession, df: DataFrame, tsCol: String,
+                     tag: String, maxTimes: Int): (DataFrame, Int) = {
+    val slices = perEventSlices(df, tsCol, maxTimes)
+    (openSlices(spark, commitTo(s"pevent_$tag", slices), df.schema), slices.length)
+  }
+
+  /** Ordered multi-batch replay of caller-built slices: opened via
+    * [[openSlices]], slice k is exactly micro-batch k. Callers append
+    * far-future sentinel slices as EOF/flush punctuation: watermark-gated
+    * emissions (outer-join null rows, final append-mode windows) need one
+    * batch that ADVANCES the watermark past the data's tail and a later
+    * batch that EXECUTES under it — a live stream gets both for free from
+    * continuing traffic, a bounded replay must punctuate. Returns the dir;
+    * call `openSlices` once per required source instance (twice for a
+    * self-join's two sides). */
+  def writeSlices(slices: Seq[DataFrame], tag: String): String =
+    replayDir("slices", slices)(commitTo(s"slices_$tag", slices))
+
+  /** A slice dir (or a [[Channels]] topic) as a stream: one commit per
+    * micro-batch. */
+  def openSlices(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+
+  /** `slices` event-time-ordered, quantile-split on `tsCol`. A null pace
+    * value fails every range filter and would vanish from the replay, so
+    * it is refused before anything is committed (one aggregate). One slice
+    * is the whole frame (`approxQuantile` with no probabilities returns
+    * null); an empty frame gives `slices` empty slices. */
+  def quantileSlices(df: DataFrame, tsCol: String, slices: Int): Seq[DataFrame] = {
+    val Row(rows: Long, paced: Long) = df.agg(count(lit(1)), count(col(tsCol))).head()
+    require(paced == rows,
+      s"quantile pacing requires a non-null $tsCol on every row; ${rows - paced} of $rows are null")
+    if (rows == 0 || slices == 1) Seq.fill(slices)(df)
+    else {
+      val withD = df.withColumn("__ts_d", col(tsCol).cast("double"))
+      val qs = withD.stat.approxQuantile(
+        "__ts_d", (1 until slices).map(_.toDouble / slices).toArray, 0.0)
+      (0 until slices).map { j =>
+        var part = withD
+        if (j > 0) part = part.filter(col("__ts_d") >= qs(j - 1))
+        if (j < slices - 1) part = part.filter(col("__ts_d") < qs(j))
+        part.drop("__ts_d")
+      }
     }
-    spark.readStream
-      .schema(df.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+  }
+
+  /** Per-event-Δt slicing (the reference's simulate_session_stream.py:63-108
+    * publish loop): one slice per DISTINCT `tsCol` value, ascending, so
+    * micro-batch k carries exactly the events of the k-th timestamp. The
+    * reference sleeps each inter-event gap before publishing; here the gap
+    * becomes commit order. Bounded: more than `maxTimes` distinct times is
+    * refused (each is a source pass and a micro-batch) — long spans belong
+    * to [[quantileSlices]]. */
+  def perEventSlices(df: DataFrame, tsCol: String, maxTimes: Int): Seq[DataFrame] = {
+    val times = df.select(col(tsCol)).distinct().orderBy(col(tsCol))
+      .limit(maxTimes + 1).collect().map(_.get(0))
+    require(times.nonEmpty, "per-event replay of an empty frame")
+    // a null pace time cannot be ordered, and the per-time equality filter
+    // would never match its rows — they would vanish from the replay
+    require(!times.contains(null),
+      s"per-event pacing requires a non-null $tsCol on every row")
+    require(times.length <= maxTimes,
+      s"per-event pacing supports at most $maxTimes distinct event times; " +
+        "use speed-factor (quantile-slice) pacing for longer spans")
+    times.toSeq.map(t => df.filter(col(tsCol) === lit(t)))
+  }
+
+  /** Write `slices` into `dir` as separate file commits, in order, stamped
+    * past everything already there. The file source replays files in
+    * modification-time order, and a single multi-part write commits parts
+    * in task-completion (arbitrary) order — which would turn earlier-range
+    * slices into droppable late data; a plain unstamped write after stamped
+    * slices could likewise sort BETWEEN them. Commit order is pinned by
+    * [[SliceStamper]], not the write clock. */
+  def commitSlices(dir: String, slices: Seq[DataFrame]): Unit = {
+    val stamper = new SliceStamper(dir)
+    slices.foreach(commitSlice(_, dir, stamper))
   }
 
   /** Explicit, strictly increasing mtimes for a sequence of slice commits
-    * into `dir`. The file source replays files in modification-time order,
-    * and back-to-back commits can TIE on filesystems with coarse (1 s)
-    * mtime granularity — replaying an earlier-range slice after a later one
-    * turns its whole range into droppable late data. Instead of trusting
-    * the write clock, each commit gets the next 2 s step past both "now"
-    * and anything already in the dir (so appends to a topic with prior
-    * publishes stay ordered after them). */
+    * into `dir`. Back-to-back commits can TIE on filesystems with coarse
+    * (1 s) mtime granularity, so instead of trusting the write clock each
+    * commit gets the next 2 s step past both "now" and anything already in
+    * the dir (so appends to a topic with prior publishes stay ordered after
+    * them). */
   private final class SliceStamper(dir: String) {
     private val t0 = {
       val existing = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -160,101 +251,7 @@ object StreamRunner {
     }
   }
 
-  /** One ordered bulk commit into `dir`, stamped past everything already
-    * there. A plain unstamped write carries wall-clock mtimes, and
-    * [[SliceStamper]] deliberately stamps AHEAD of the wall clock (2 s per
-    * slice) — so a bulk publish following a paced publish could land its
-    * files BETWEEN earlier slices in mtime order, turning earlier-range
-    * data into droppable late data. Used by [[Channels.publish]]. */
-  def writeOrderedCommit(df: DataFrame, dir: String): Unit =
-    commitSlice(df, dir, new SliceStamper(dir))
-
-  /** Write `df` into `dir` as `slices` event-time-ordered file commits
-    * (quantile-split on `tsCol`). Slices must be written in event-time order
-    * as separate commits: the file source replays files in
-    * modification-time order, and a single multi-part write commits parts
-    * in task-completion (arbitrary) order — which would turn earlier-range
-    * slices into droppable late data. Commit order is pinned by
-    * [[SliceStamper]], not the write clock. Shared by [[replayPaced]] and
-    * the channel publisher ([[Channels]]). */
-  def writePacedSlices(df: DataFrame, tsCol: String, slices: Int,
-                       dir: String, dropCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.col
-    val withD = df.withColumn("__ts_d", col(tsCol).cast("double"))
-    val qs = withD.stat.approxQuantile(
-      "__ts_d", (1 until slices).map(_.toDouble / slices).toArray, 0.0)
-    val stamper = new SliceStamper(dir)
-    for (j <- 0 until slices) {
-      var part = withD
-      if (j > 0) part = part.filter(col("__ts_d") >= qs(j - 1))
-      if (j < slices - 1) part = part.filter(col("__ts_d") < qs(j))
-      commitSlice(part.drop("__ts_d").drop(dropCols: _*), dir, stamper)
-    }
-  }
-
-  /** Per-event-Δt slicing (the reference's simulate_session_stream.py:63-108
-    * publish loop): one file commit per DISTINCT `tsCol` value, ascending,
-    * so — opened with `maxFilesPerTrigger=1` — micro-batch k carries exactly
-    * the events of the k-th timestamp. The reference sleeps each
-    * inter-event gap before publishing; here the gap becomes commit order
-    * (correctness is event-time processing, never arrival pacing). Bounded:
-    * more than `maxTimes` distinct times is refused (each is a source pass
-    * and a micro-batch) — long spans belong to quantile-slice pacing
-    * ([[writePacedSlices]]). Returns the commit count. */
-  def writePerEventSlices(df: DataFrame, tsCol: String, dir: String,
-                          maxTimes: Int, dropCols: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val times = df.select(col(tsCol)).distinct().orderBy(col(tsCol))
-      .limit(maxTimes + 1).collect().map(_.get(0))
-    require(times.nonEmpty, "per-event replay of an empty frame")
-    // fail fast, not silently: a null pace time cannot be ordered, and the
-    // per-time equality filter below would never match its rows — they
-    // would vanish from the replay (and the null would still burn one of
-    // the maxTimes commit slots on an empty slice)
-    require(!times.contains(null),
-      s"per-event pacing requires a non-null $tsCol on every row")
-    require(times.length <= maxTimes,
-      s"per-event pacing supports at most $maxTimes distinct event times; " +
-        "use speed-factor (quantile-slice) pacing for longer spans")
-    val stamper = new SliceStamper(dir)
-    for (t <- times)
-      commitSlice(df.filter(col(tsCol) === lit(t)).drop(dropCols: _*), dir, stamper)
-    times.length
-  }
-
-  /** [[writePerEventSlices]] into a scratch dir, reopened as a
-    * one-commit-per-trigger stream; returns (stream, micro-batch count). */
-  def replayPerEvent(spark: SparkSession, df: DataFrame, tsCol: String,
-                     tag: String, maxTimes: Int = 96): (DataFrame, Int) = {
-    val dir = tempDir(s"pevent_$tag")
-    val n = writePerEventSlices(df, tsCol, dir, maxTimes)
-    (spark.readStream
-      .schema(df.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir), n)
-  }
-
-  /** Ordered multi-batch replay: write each slice as its own file-source
-    * commit (modification-time order = slice order) so that, opened with
-    * `maxFilesPerTrigger=1` via `openSlices`, slice k is exactly micro-batch
-    * k. Callers append far-future sentinel slices as EOF/flush punctuation:
-    * watermark-gated emissions (outer-join null rows, final append-mode
-    * windows) need one batch that ADVANCES the watermark past the data's
-    * tail and a later batch that EXECUTES under it — a live stream gets both
-    * for free from continuing traffic, a bounded replay must punctuate.
-    * Returns the dir; call `openSlices` once per required source instance
-    * (twice for a self-join's two sides). */
-  def writeSlices(slices: Seq[DataFrame], tag: String): String =
-    replayDir("slices", slices) {
-      val dir = tempDir(s"slices_$tag")
-      val stamper = new SliceStamper(dir)
-      slices.foreach(s => commitSlice(s, dir, stamper))
-      dir
-    }
-
-  def openSlices(spark: SparkSession, dir: String,
-                 schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+  // --- run lifecycle ---------------------------------------------------
 
   /** State partitions for harness-scale streaming queries. Stateful
     * streaming fixes its shuffle-partition count into the checkpoint at the
@@ -263,59 +260,11 @@ object StreamRunner {
     * traffic) dominates at harness scale and does NOT parallelize away:
     * measured on the full 15-query streaming subset at sf0.1 (warm pass,
     * identical code), 2 parts → 22.0 s, 4 → 24.7 s, 8 → 26.5 s,
-    * 16 → 71.8 s. Two partitions keep the multi-partition code path
-    * (cross-partition key hashing) exercised. Batch queries keep the
-    * session's setting; on a real cluster this is sized to state volume,
-    * not taken from the batch default. */
-  val StateParts: String = sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "2")
-
-  /** `flush`: whether the query's OUTPUT depends on trailing no-data
-    * micro-batches. The bounded-replay flush design for watermark-gated
-    * APPEND emission (q19d's outer-join null rows, q20*'s final windows)
-    * RELIES on them: sentinel rows ride in the final data slice, its
-    * end-of-batch watermark clears everything real, and the no-data
-    * batch(es) AvailableNow keeps running while stateful operators have
-    * pending work execute the evictions that EMIT those results — pinned
-    * on, because turning it off would silently EMPTY those sinks.
-    * Queries whose emission is EAGER (inner joins, dropDuplicates*,
-    * update-mode aggregation, NoTimeout flatMapGroupsWithState) emit
-    * everything during the data batches; their trailing no-data batch is a
-    * pure state-eviction scan producing zero output rows (measured ~0.3–1 s
-    * per stateful operator at sf0.1) — those pass `flush = false` and skip
-    * it. Production streams keep the default: there, eviction IS the
-    * mechanism that bounds state. */
-  /** Run a streaming frame to completion with a caller-supplied
-    * `foreachBatch` body — the `toParquet`/`toUpsert` lifecycle
-    * (AvailableNow trigger, bounded await, state-store unload) exposed for
-    * pipelines that maintain their own cross-batch state tables (q45b's
-    * seen-key set and packing offsets). `checkpoint`: pass a caller-owned
-    * location to make the run RESUMABLE — a later call with the same
-    * checkpoint continues from the committed source offsets with
-    * continuing batch ids (the restart path a production streaming job
-    * exercises on every redeploy); defaults to fresh one-shot scratch. */
-  def runBatches(spark: SparkSession, sdf: DataFrame, tag: String,
-                 flush: Boolean = true, checkpoint: Option[String] = None)(
-                 f: (DataFrame, Long) => Unit): Unit =
-    withStateParts(spark, flush) {
-      val q = sdf.writeStream
-        .foreachBatch(f)
-        .option("checkpointLocation", checkpoint.getOrElse(tempDir(s"chk_$tag")))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q, tag)
-    }
-
-  private def withStateParts[T](spark: SparkSession, flush: Boolean)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, StateParts)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", flush.toString)
-    try f
-    finally {
-      spark.conf.set(key, old)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    }
-  }
+    * 16 → 71.8 s (OPTIMIZATION_r16.md). Two partitions keep the
+    * multi-partition code path (cross-partition key hashing) exercised.
+    * Batch queries keep the session's setting; on a real cluster this is
+    * sized to state volume, not taken from the batch default. */
+  private val StateParts = "2"
 
   /** Last EXECUTED micro-batch plan per tag, captured at termination: a
     * streaming frame explained before `start()` shows only source
@@ -327,40 +276,101 @@ object StreamRunner {
 
   def lastStreamingPlan(tag: String): Option[String] = lastPlans.get(tag)
 
-  /** Await a started query with a bounded wait (a wedged stream must fail
-    * the one query, not hang the whole verification round), then unload the
-    * terminated query's state-store providers — in a `finally`, so even a
-    * timed-out/failed query can't leave completed-query state (session
-    * windows, dedup maps) resident to degrade every later stateful query in
-    * the same JVM. */
-  private def awaitAndUnload(q: org.apache.spark.sql.streaming.StreamingQuery,
-                             tag: String): Unit =
+  /** The one run lifecycle. For the run's duration the session gets
+    * [[StateParts]] shuffle partitions, `flush` as
+    * `noDataMicroBatches.enabled`, and — iff the plan has a
+    * `transformWithState` operator, which requires it — the RocksDB
+    * state-store provider; each is restored to its previous value after.
+    * The conf is session-global, so runs on one session must not overlap.
+    *
+    * `flush`: whether the query's OUTPUT depends on trailing no-data
+    * micro-batches. The bounded-replay flush design for watermark-gated
+    * APPEND emission (q19d's outer-join null rows, q20*'s final windows)
+    * RELIES on them: sentinel rows ride in the final data slice, its
+    * end-of-batch watermark clears everything real, and the no-data
+    * batch(es) AvailableNow keeps running while stateful operators have
+    * pending work execute the evictions that EMIT those results. Queries
+    * whose emission is EAGER (inner joins, dropDuplicates*, update-mode
+    * aggregation, NoTimeout flatMapGroupsWithState) emit everything during
+    * the data batches; their trailing no-data batch is a pure
+    * state-eviction scan producing zero output rows (measured ~0.3–1 s per
+    * stateful operator at sf0.1) — those pass `flush = false`.
+    *
+    * `checkpoint`: a caller-owned location makes the run RESUMABLE (a later
+    * run with it continues from the committed source offsets with
+    * continuing batch ids — a [[Channels]] subscription's delivery cursor,
+    * q45b's restart path); `None` is fresh one-shot scratch. `writer`
+    * configures the sink on an `AvailableNow` writer (it may replace the
+    * trigger); the query is stopped early once `stopWhen` holds. The wait
+    * is bounded (a wedged stream fails the one query, not the whole
+    * verification round), and the terminated query's state-store providers
+    * are unloaded in a `finally`, so even a timed-out/failed query can't
+    * leave its state resident to degrade every later stateful query in the
+    * same JVM. */
+  private[streaming] def run(sdf: DataFrame, tag: String, checkpoint: Option[String],
+      flush: Boolean, stopWhen: StreamingQuery => Boolean)(
+      writer: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val conf = sdf.sparkSession.conf
+    val overrides = Seq(
+      "spark.sql.shuffle.partitions" -> StateParts,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> flush.toString) ++
+      (if (sdf.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+         Seq("spark.sql.streaming.stateStore.providerClass" ->
+           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+       else Nil)
+    val saved = overrides.map { case (k, _) => k -> conf.getOption(k) }
+    overrides.foreach { case (k, v) => conf.set(k, v) }
     try {
-      if (!q.awaitTermination(10 * 60 * 1000L)) {
-        q.stop()
-        throw new IllegalStateException(s"streaming query $tag timed out")
+      val q = writer(sdf.writeStream
+        .option("checkpointLocation", checkpoint.getOrElse(tempDir(s"chk_$tag")))
+        .trigger(Trigger.AvailableNow())).start()
+      try {
+        val deadline = System.nanoTime() + 10 * 60 * 1000000000L
+        while (!q.awaitTermination(50L)) {
+          if (stopWhen(q)) q.stop()
+          else if (System.nanoTime() > deadline) {
+            q.stop()
+            throw new IllegalStateException(s"streaming query $tag timed out")
+          }
+        }
+      } finally {
+        // best-effort plan capture (explain prints the last micro-batch's
+        // physical plan) before the state stores unload
+        try {
+          val bos = new java.io.ByteArrayOutputStream()
+          Console.withOut(new java.io.PrintStream(bos, true, "UTF-8"))(q.explain())
+          val p = bos.toString("UTF-8")
+          if (p.nonEmpty) lastPlans.put(tag, p)
+        } catch { case scala.util.control.NonFatal(_) => () }
       }
     } finally {
-      // best-effort plan capture (q.explain() prints the last micro-batch's
-      // physical plan; throws if no batch ever executed) before the state
-      // stores unload
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(bos, true, "UTF-8"))(q.explain())
-        val p = bos.toString("UTF-8")
-        if (p.nonEmpty) lastPlans.put(tag, p)
-      } catch { case scala.util.control.NonFatal(_) => () }
       StateStore.stop()
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
     }
+  }
 
-  /** Read a finished stream's sink dir back. An empty replay (zero
-    * micro-batches, or batches that emitted no rows) leaves no data files,
-    * and schema *inference* over an empty dir throws — so the read is
-    * pinned to the stream's own schema, under which zero matched files is
-    * simply an empty frame. */
-  private def readSink(spark: SparkSession, out: String,
-                       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).parquet(out)
+  private[streaming] def parquetSink(out: String)(
+      w: DataStreamWriter[Row]): DataStreamWriter[Row] =
+    w.format("parquet").option("path", out).outputMode("append")
+
+  /** Read a sink dir back pinned to the stream's own schema. An empty run
+    * (zero micro-batches, or batches that emitted no rows) leaves no data
+    * files, and schema *inference* over them throws — under the pinned
+    * schema zero matched files is simply an empty frame, and a dir that was
+    * never created reads the same. */
+  private[streaming] def readSink(spark: SparkSession, dir: String,
+                                  schema: StructType): DataFrame =
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+      spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** Run a streaming frame to completion with a caller-supplied
+    * `foreachBatch` body — for pipelines that maintain their own
+    * cross-batch state tables (q45b's seen-key set and packing offsets). */
+  def runBatches(spark: SparkSession, sdf: DataFrame, tag: String,
+                 flush: Boolean = true, checkpoint: Option[String] = None)(
+                 f: (DataFrame, Long) => Unit): Unit =
+    run(sdf, tag, checkpoint, flush, _ => false)(_.foreachBatch(f))
 
   /** Run an update-mode streaming frame into a KEYED parquet state table:
     * each micro-batch carries only the groups whose aggregate changed, and
@@ -373,98 +383,60 @@ object StreamRunner {
     * exactly-once from the checkpointed source offsets. */
   def toUpsert(spark: SparkSession, sdf: DataFrame, keys: Seq[String],
                tag: String, flush: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val base = tempDir(s"upsert_$tag")
     @volatile var current: Option[String] = None
-    withStateParts(spark, flush) {
-      val q = sdf.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val ss = batch.sparkSession
-          val merged = current match {
-            case None => batch
-            case Some(dir) =>
-              ss.read.schema(sdf.schema).parquet(dir)
-                .join(batch.select(keys.map(col): _*), keys, "left_anti")
-                .unionByName(batch)
-          }
-          val v = s"$base/v$id"
-          merged.write.mode("overwrite").parquet(v)
-          current = Some(v)
+    run(sdf, tag, None, flush, _ => false)(_.outputMode("update").foreachBatch {
+      (batch: DataFrame, id: Long) =>
+        val merged = current match {
+          case None => batch
+          case Some(dir) =>
+            batch.sparkSession.read.schema(sdf.schema).parquet(dir)
+              .join(batch.select(keys.map(col): _*), keys, "left_anti")
+              .unionByName(batch)
         }
-        .option("checkpointLocation", tempDir(s"chk_$tag"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q, tag)
-    }
-    current match {
-      case Some(dir) => spark.read.schema(sdf.schema).parquet(dir)
-      case None => spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), sdf.schema)
-    }
+        val v = s"$base/v$id"
+        merged.write.mode("overwrite").parquet(v)
+        current = Some(v)
+    })
+    // no batch ran: the (empty) base dir is the empty table
+    readSink(spark, current.getOrElse(base), sdf.schema)
   }
 
   /** Run an append-mode streaming frame to a parquet sink (row-level
     * results too big for the driver) and read the sink back. */
-  /** `checkpoint`: pass a caller-owned location (e.g. a [[Channels]]
-    * subscription's delivery cursor) so consumption is durable across runs;
-    * defaults to a fresh scratch dir (one-shot replay semantics). */
   def toParquet(spark: SparkSession, sdf: DataFrame, tag: String,
                 checkpoint: Option[String] = None,
                 flush: Boolean = true): DataFrame = {
     val out = tempDir(s"sink_$tag")
-    withStateParts(spark, flush) {
-      val q = sdf.writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", checkpoint.getOrElse(tempDir(s"chk_$tag")))
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q, tag)
-    }
+    run(sdf, tag, checkpoint, flush, _ => false)(parquetSink(out))
     readSink(spark, out, sdf.schema)
   }
 
-  /** Run an append-mode streaming frame on a REAL wall-clock trigger — the
-    * reference demo's pacing behavior (simulate_session_stream.py:89-93
-    * sleeps the inter-event gap; send_session_stream.py publishes one
-    * simulated minute per real minute): micro-batches FIRE every
-    * `intervalMs` of wall time instead of AvailableNow draining the backlog
-    * as fast as it can. With the source slice-committed and opened at
-    * `maxFilesPerTrigger=1`, each firing consumes exactly one publishing
-    * minute of data. A ProcessingTime query never self-terminates, so the
-    * run is bounded: poll progress until `expectBatches` NON-EMPTY batches
-    * have fired (or `timeoutMs`, a flake bound for CI hosts — partial
-    * progress is returned, never an exception), then stop and unload state.
-    * Returns (sink frame, observed non-empty batch count). Correctness is
-    * identical to [[toParquet]] — event-time semantics don't depend on
-    * arrival pacing (SURVEY §3.2) — this mode exists because the demo
-    * cadence itself is reference behavior a user may want to reproduce. */
+  /** [[toParquet]] on a REAL wall-clock trigger — the reference demo's
+    * pacing behavior (simulate_session_stream.py:89-93 sleeps the
+    * inter-event gap; send_session_stream.py publishes one simulated minute
+    * per real minute): micro-batches FIRE every `intervalMs` of wall time
+    * instead of AvailableNow draining the backlog as fast as it can. With
+    * the source opened by [[openSlices]], each firing consumes exactly one
+    * publishing minute of data. A ProcessingTime query never
+    * self-terminates, so the run stops once `expectBatches` NON-EMPTY
+    * batches have fired (or `timeoutMs`, a flake bound for CI hosts —
+    * partial progress is returned, never an exception). Returns (sink
+    * frame, observed non-empty batch count). Correctness is identical to
+    * [[toParquet]] — event-time semantics don't depend on arrival pacing
+    * (SURVEY §3.2) — this mode exists because the demo cadence itself is
+    * reference behavior a user may want to reproduce. */
   def toParquetWallclock(spark: SparkSession, sdf: DataFrame, tag: String,
                          intervalMs: Long, expectBatches: Int,
                          checkpoint: Option[String] = None,
                          timeoutMs: Long = 120000L): (DataFrame, Int) = {
     val out = tempDir(s"sink_$tag")
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
     var nonEmpty = 0
-    withStateParts(spark, flush = false) {
-      val q = sdf.writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", checkpoint.getOrElse(tempDir(s"chk_$tag")))
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime(intervalMs))
-        .start()
-      try {
-        val deadline = System.nanoTime() + timeoutMs * 1000000L
-        while (nonEmpty < expectBatches && System.nanoTime() < deadline) {
-          Thread.sleep(math.max(20L, intervalMs / 4))
-          nonEmpty = q.recentProgress.count(_.numInputRows > 0)
-        }
-      } finally {
-        try q.stop() finally StateStore.stop()
-      }
-    }
+    run(sdf, tag, checkpoint, flush = false, { q =>
+      nonEmpty = q.recentProgress.count(_.numInputRows > 0)
+      nonEmpty >= expectBatches || System.nanoTime() > deadline
+    })(parquetSink(out)(_).trigger(Trigger.ProcessingTime(intervalMs)))
     (readSink(spark, out, sdf.schema), nonEmpty)
   }
 }

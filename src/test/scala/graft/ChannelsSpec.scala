@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Channels
+import graft.streaming.{Channels, StreamRunner}
 import org.apache.spark.sql.functions._
 
 /** The channel admin lifecycle (S-stream analogue of Pub/Sub topic/
@@ -40,13 +40,15 @@ class ChannelsSpec extends SparkSpec {
     val ch = Channels(TempDirs.create("graft_ch_data_"))
     ch.createTopic("t")
     ch.createSubscription("early", "t")
-    ch.publish(msgs("a", "b"), "t")
+    ch.publish("t", Seq(msgs("a", "b")))
     val earlyOut = TempDirs.create("graft_ch_early_")
     assert(strings(ch.drain(spark, "early", earlyOut)) === Set("a", "b"))
+    // the drain ran through the one run lifecycle: its plan is captured
+    assert(StreamRunner.lastStreamingPlan("drain_early").nonEmpty)
     // second drain with no new publishes: nothing new delivered
     assert(strings(ch.drain(spark, "early", earlyOut)) === Set("a", "b"))
     // new publish: the cursor resumes from the last drained commit
-    ch.publish(msgs("c"), "t")
+    ch.publish("t", Seq(msgs("c")))
     assert(strings(ch.drain(spark, "early", earlyOut)) === Set("a", "b", "c"))
     // a late subscription still receives the full topic (fan-out)
     ch.createSubscription("late", "t")
@@ -58,7 +60,7 @@ class ChannelsSpec extends SparkSpec {
     val ch = Channels(TempDirs.create("graft_ch_detach_"))
     ch.createTopic("t")
     ch.createSubscription("s", "t")
-    ch.publish(msgs("a", "b"), "t")
+    ch.publish("t", Seq(msgs("a", "b")))
     val out = TempDirs.create("graft_ch_detach_out_")
     assert(strings(ch.drain(spark, "s", out)) === Set("a", "b"))
     ch.deleteTopic("t")
@@ -71,12 +73,12 @@ class ChannelsSpec extends SparkSpec {
     val ch = Channels(TempDirs.create("graft_ch_incarn_"))
     ch.createTopic("t")
     ch.createSubscription("s", "t")
-    ch.publish(msgs("a"), "t")
+    ch.publish("t", Seq(msgs("a")))
     val out = TempDirs.create("graft_ch_incarn_out_")
     assert(strings(ch.drain(spark, "s", out)) === Set("a"))
     ch.deleteTopic("t")
     ch.createTopic("t") // same name, NEW topic resource
-    ch.publish(msgs("b"), "t")
+    ch.publish("t", Seq(msgs("b")))
     // the old binding's seen-files log could skip/misorder the new
     // incarnation's messages — the drain must refuse, not guess
     val e = intercept[IllegalArgumentException](ch.drain(spark, "s", out))
@@ -91,7 +93,7 @@ class ChannelsSpec extends SparkSpec {
     val ch = Channels(TempDirs.create("graft_ch_legacy_"))
     ch.createTopic("t")
     ch.createSubscription("s", "t")
-    ch.publish(msgs("a"), "t")
+    ch.publish("t", Seq(msgs("a")))
     // a subscription dir from before incarnation stamping has no marker;
     // against a stamped topic the drain must refuse CLEANLY (binding can't
     // be verified), not crash with NoSuchFileException
@@ -113,11 +115,11 @@ class ChannelsSpec extends SparkSpec {
     val paced = spark.range(8).selectExpr(
       "CAST(CAST(id AS STRING) AS BINARY) AS value",
       "timestamp_seconds(1704067200 + id * 60) AS pts")
-    ch.publishPaced(paced, "pts", 4, "t")
+    ch.publish("t", StreamRunner.quantileSlices(paced, "pts", 4).map(_.drop("pts")))
     val topicDir = new java.io.File(s"${ch.root}/topics/t")
     def snapshot() = topicDir.listFiles().map(f => f.getName -> f.lastModified()).toMap
     val before = snapshot()
-    ch.publish(msgs("late"), "t")
+    ch.publish("t", Seq(msgs("late")))
     val after = snapshot()
     // paced slices are stamped AHEAD of the wall clock; an unstamped bulk
     // commit would sort between them and break replay order
@@ -141,6 +143,6 @@ class ChannelsSpec extends SparkSpec {
     val ch = Channels(TempDirs.create("graft_ch_guard_"))
     ch.createTopic("t")
     assertThrows[IllegalArgumentException](
-      ch.publish(spark.range(1).select(col("id")), "t"))
+      ch.publish("t", Seq(spark.range(1).select(col("id")))))
   }
 }

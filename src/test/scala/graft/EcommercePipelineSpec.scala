@@ -94,7 +94,9 @@ class EcommercePipelineSpec extends SparkSpec {
   }
 
   test("streaming pipeline: wire codec + per-event transform reach the sink") {
-    val sink = EcommercePipelines.runStream(spark, csvPath)
+    val out = TempDirs.create("graft_ecom_stream_out_")
+    ReplayPipelineCli.main(Array("--input", csvPath, "--output", out))
+    val sink = spark.read.parquet(out)
     assert(sink.count() === 5)
     val row = sink.filter(sink("product_id") === "1002")
       .select("hour", "category", "sub_category", "product", "product_details", "price")

@@ -52,9 +52,39 @@ class PacedReplaySpec extends SparkSpec {
     val df = spark.range(3).selectExpr("id AS v",
       "IF(id = 1, CAST(NULL AS timestamp), timestamp_seconds(1704067200 + id)) AS ts")
     val e = intercept[IllegalArgumentException](
-      StreamRunner.writePerEventSlices(df, "ts", TempDirs.create("graft_nullts_"),
-        maxTimes = 10))
+      StreamRunner.perEventSlices(df, "ts", maxTimes = 10))
     assert(e.getMessage.contains("non-null"))
+  }
+
+  test("quantile pacing at one slice replays the whole frame") {
+    val df = spark.range(10).selectExpr("id", "timestamp_seconds(1704067200 + id * 60) AS ts")
+    val one = StreamRunner.replayPaced(spark, df, "ts", slices = 1, tag = "one_slice")
+    assert(StreamRunner.toParquet(spark, one, "one_slice").count() === 10)
+    // an empty frame has no quantiles either: every slice is empty
+    val empty = StreamRunner.quantileSlices(df.limit(0), "ts", 4)
+    assert(empty.length === 4 && empty.forall(_.isEmpty))
+  }
+
+  test("quantile pacing refuses null pace rows at any slice count, before committing") {
+    // a null pace value fails every range filter of a multi-slice split and
+    // would vanish from the replay; an all-null column has no quantiles
+    val withNull = spark.range(10).selectExpr(
+      "CAST(CAST(id AS STRING) AS BINARY) AS value",
+      "IF(id % 3 = 0, CAST(NULL AS timestamp), timestamp_seconds(1704067200 + id * 60)) AS pts")
+    val allNull = withNull.withColumn("pts", lit(null).cast("timestamp"))
+    val ch = graft.streaming.Channels(TempDirs.create("graft_nullpace_"))
+    ch.createTopic("t")
+    for ((df, slices) <- Seq((withNull, 1), (withNull, 4), (allNull, 4))) {
+      val replayed = intercept[IllegalArgumentException](
+        StreamRunner.replayPaced(spark, df, "pts", slices, "nullpace"))
+      assert(replayed.getMessage.contains("non-null"), s"replay at $slices slices")
+      val published = intercept[IllegalArgumentException](ch.publish("t",
+        StreamRunner.quantileSlices(df, "pts", slices).map(_.drop("pts"))))
+      assert(published.getMessage.contains("non-null"), s"publish at $slices slices")
+    }
+    val committed = new java.io.File(s"${ch.root}/topics/t").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(committed.isEmpty, "a refused publish committed slices")
   }
 
   test("scale-up text perturbation is never the identity for replicas 1..99") {

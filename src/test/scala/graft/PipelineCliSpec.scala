@@ -117,6 +117,7 @@ class PipelineCliSpec extends SparkSpec {
     // host), plus the full row count — completeness never depends on
     // pacing.
     val out = TempDirs.create("graft_cli_wallclock_out_")
+    val planBefore = graft.streaming.StreamRunner.lastStreamingPlan("cli_sink")
     val outStream = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(outStream, true, "UTF-8")) {
       ReplayPipelineCli.main(Array(
@@ -128,6 +129,11 @@ class PipelineCliSpec extends SparkSpec {
     val fired = "wall-clock trigger: (\\d+) non-empty".r
       .findFirstMatchIn(receipt).map(_.group(1).toInt)
     assert(fired.exists(_ >= 2), s"expected >=2 wall-clock micro-batches, receipt:\n$receipt")
+    // the wall-clock run records its own plan (earlier CLI runs in this
+    // session share the tag, so the string must be a new one, not theirs)
+    val plan = graft.streaming.StreamRunner.lastStreamingPlan("cli_sink")
+    assert(plan.nonEmpty)
+    assert(!planBefore.exists(b => plan.exists(_ eq b)), "wall-clock run captured no plan")
   }
 
   test("replay CLI rejects --wallclock together with --perEvent") {

@@ -259,6 +259,22 @@ class StreamingSpec extends SparkSpec {
     assert(out.count() === 0L)
   }
 
+  test("a stream run restores the session confs it overrides") {
+    import graft.sources.Tables
+    import graft.streaming.StreamRunner
+    val keys = Seq("spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.shuffle.partitions", "spark.sql.streaming.stateStore.providerClass")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "false")
+    val before = keys.map(spark.conf.get)
+    try {
+      val stream = StreamRunner.replay(spark,
+        Tables.events(spark, sf).select(col("event_id")), "conf_restore")
+      assert(StreamRunner.toParquet(spark, stream, "conf_restore").count() > 0)
+      assert(keys.map(spark.conf.get) === before)
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("ProcessingTime trigger paces non-empty micro-batches on the wall clock") {
     // The one reference behavior the AvailableNow harness never executes:
     // real-time pacing (simulate_session_stream.py:89-93 sleeps Δevent-time
@@ -376,14 +392,14 @@ class StreamingSpec extends SparkSpec {
     def openSrc() = spark.readStream.schema(bd.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     // first run: only the first half of the nightly batch has arrived
-    streaming.StreamRunner.writePacedSlices(
-      bd.filter(col("doc_id") < mid), "dts", 2, srcDir)
+    streaming.StreamRunner.commitSlices(srcDir,
+      streaming.StreamRunner.quantileSlices(bd.filter(col("doc_id") < mid), "dts", 2))
     graft.queries.CurationPipeline.runStreamingCuration(
       spark, d, openSrc(), outRoot, stateRoot, chk)
     // crash/redeploy: the second half arrives, a FRESH call (no driver
     // state survives) resumes from the same checkpoint + stateRoot
-    streaming.StreamRunner.writePacedSlices(
-      bd.filter(col("doc_id") >= mid), "dts", 2, srcDir)
+    streaming.StreamRunner.commitSlices(srcDir,
+      streaming.StreamRunner.quantileSlices(bd.filter(col("doc_id") >= mid), "dts", 2))
     graft.queries.CurationPipeline.runStreamingCuration(
       spark, d, openSrc(), outRoot, stateRoot, chk)
 
